@@ -11,9 +11,10 @@ object Catalog {
   val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Idempotence guard: registration reads every table's parquet footer
-  // (~0.7 s for 10 tables), so repeated calls against the SAME dir — the
-  // common case: every SQL-surface query calls registerAll — skip it.
+  // Idempotence guard: registering the 10 views costs ~0.15 s even with
+  // the footers memoized (4 cores, sf0.01; the first registration in a
+  // JVM ~1.4 s), so repeated calls against the SAME dir — the common
+  // case: every SQL-surface query calls registerAll — skip it.
   // A dir change (tests hop between scale factors) re-registers, since
   // the existing views point at the previous dir's files. Keyed weakly
   // per session so stopped sessions don't pin the map. The memo is
