@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   *   - Broadcast threshold left at default (10 MB) — dims like region/
   *     nation/supplier broadcast automatically; we additionally hint
   *     `broadcast()` where we know the dimension is small at any SF.
+  *   - `file:` checkpoints are written through [[LocalCheckpointFs]]
+  *     (no `readlink`/`chmod` process per checkpoint file).
+  * [[tune]] sets every runtime conf; [[session]] only the build-time ones.
   */
 object Engine {
   def session(master: String = "local[*]", shufflePartitions: Int = 32,
@@ -23,24 +26,6 @@ object Engine {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI on is the Spark 4 default; pinned so the engine's declared
-      // error semantics (fail loudly on bad casts/overflow; operators
-      // that must be total guard explicitly — see TextOps/SimSearch/
-      // parseCsv) don't drift with deployment defaults.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // partitioned-index lookups (bands/fps/grams bucket dirs) list
-      // their dirs at EVERY read; the default threshold (32) launches a
-      // one-task-per-dir discovery JOB for any index over 32 buckets —
-      // pure dispatch overhead at micro-batch cadence. Driver-side
-      // listing is faster up to ~1k dirs on any filesystem with sane
-      // metadata; the index layouts cap at 65536 buckets, where the
-      // parallel job is again the right call.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.ui.enabled", "false")
     // Large streaming state (big windows, wide Top-N key spaces) should
     // live off-heap: the RocksDB provider spills to local disk instead of
@@ -49,15 +34,19 @@ object Engine {
     if (rocksDbState) builder.config(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+    val spark = tune(builder.getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Apply the engine defaults to an externally created session (the
-    * driver's Verify/Bench mains create their own). Safe to call on a
-    * running session: all of these are runtime-mutable SQL confs. */
+  /** Apply the engine defaults to a session, including one created
+    * elsewhere (the Verify/Bench mains create their own). Safe to call on
+    * a running session: all of these are runtime-mutable confs. */
   def tune(spark: SparkSession): SparkSession = {
+    // ANSI on is the Spark 4 default; pinned so the engine's declared
+    // error semantics (fail loudly on bad casts/overflow; operators that
+    // must be total guard explicitly — see TextOps/SimSearch/parseCsv)
+    // don't drift with deployment defaults.
     spark.conf.set("spark.sql.ansi.enabled", "true")
     // TIMESTAMP(NANOS) parquet columns (events table) read as raw longs
     // engine-wide; Tables.events owns the ns→µs conversion. Declared here
@@ -67,8 +56,17 @@ object Engine {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // see session(): keep index-dir discovery driver-side up to 1k dirs
+    // partitioned-index lookups (bands/fps/grams bucket dirs) list their
+    // dirs at EVERY read; the default threshold (32) launches a
+    // one-task-per-dir discovery JOB for any index over 32 buckets — pure
+    // dispatch overhead at micro-batch cadence. Driver-side listing is
+    // faster up to ~1k dirs on any filesystem with sane metadata; the
+    // index layouts cap at 65536 buckets, where the parallel job is again
+    // the right call.
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    // copied into every `sessionState.newHadoopConf()`: reaches the
+    // offset/commit logs and the executors' state stores
+    spark.conf.set(LocalCheckpointFs.ConfKey, classOf[LocalCheckpointFs].getName)
     spark
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Runnable end-to-end smoke for the streaming layer:
   * `sbt "runMain graft.streaming.StreamingSmoke <inDir>"`.
@@ -9,9 +10,25 @@ import org.apache.spark.sql.SparkSession
   * streaming source) through the Job-B pipeline and prints the ranked
   * hot items; then exercises the Job-A JSON parser on a mixed
   * valid/garbage batch. Used for manual verification where the MySQL /
-  * Kafka endpoints of the reference don't exist.
+  * Kafka endpoints of the reference don't exist. Each query also prints
+  * one `[stream]` JSON line of its progress totals ([[progressLine]]).
   */
 object StreamingSmoke {
+  /** `[stream]` + JSON: the query's batch count and, summed over its
+    * `recentProgress`, the micro-batch phase times that carry the sink
+    * (`addBatch`) and the checkpoint writes (`walCommit` for the offset
+    * log, `commitOffsets` for the commit log), plus the state stores'
+    * `commitTimeMs`. */
+  def progressLine(q: StreamingQuery): String = {
+    val ps = q.recentProgress
+    def phase(k: String) = ps.map(_.durationMs.getOrDefault(k, 0L).longValue).sum
+    val stateCommit = ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum
+    val phases = Seq("addBatch", "walCommit", "commitOffsets")
+      .map(k => s""""${k}_ms":${phase(k)}""").mkString(",")
+    s"""[stream] {"query":"${Option(q.name).getOrElse(q.id)}","batches":${ps.length},""" +
+      s"""$phases,"state_commit_ms":$stateCommit}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val inDir = args.headOption.getOrElse("/tmp/drive/jobB_in")
     val spark = graft.Engine.session("local[4]", shufflePartitions = 4)
@@ -21,6 +38,7 @@ object StreamingSmoke {
     val q = HotItemAnalysisJob.pipeline(lines, 3)
       .writeStream.outputMode("append").format("memory").queryName("smokeB").start()
     q.processAllAvailable()
+    println(progressLine(q))
     println("=== JobB ranked items (window end 3600000 ms) ===")
     spark.sql("select * from smokeB where windowEnd = 3600000 order by rank").show(false)
     println("=== JobB distinct emitted windows: " +
@@ -50,6 +68,7 @@ object StreamingSmoke {
           .withColumnRenamed("value", "value"))
       .writeStream.outputMode("append").format("memory").queryName("smokeA").start()
     qa.processAllAvailable()
+    println(progressLine(qa))
     println("=== JobA windowed counts (full pipeline over file source) ===")
     spark.sql("select unix_millis(time) end_ms, appid, type, count from smokeA order by end_ms, appid").show(false)
     qa.stop()
