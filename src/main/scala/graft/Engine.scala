@@ -17,24 +17,19 @@ import org.apache.spark.sql.SparkSession
   *     `broadcast()` where we know the dimension is small at any SF.
   *   - `file:` checkpoints are written through [[LocalCheckpointFs]]
   *     (no `readlink`/`chmod` process per checkpoint file).
+  *   - Streaming state uses Spark's default store; large state (big
+  *     windows, wide Top-N key spaces) can move to RocksDB through
+  *     Spark's own `spark.sql.streaming.stateStore.providerClass` conf.
   * [[tune]] sets every runtime conf; [[session]] only the build-time ones.
   */
 object Engine {
-  def session(master: String = "local[*]", shufflePartitions: Int = 32,
-      rocksDbState: Boolean = false): SparkSession = {
-    val builder = SparkSession.builder()
+  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+    val spark = tune(SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
-    // Large streaming state (big windows, wide Top-N key spaces) should
-    // live off-heap: the RocksDB provider spills to local disk instead of
-    // holding every version in executor memory. transformWithState
-    // requires it; flatMapGroupsWithState benefits from it.
-    if (rocksDbState) builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = tune(builder.getOrCreate())
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

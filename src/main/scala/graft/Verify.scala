@@ -6,6 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
+    // an unknown name would dump nothing and pass the narrowed compare
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.mkString(" ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString) // match Bench's default
     val spark = SparkSession.builder()
@@ -17,9 +23,8 @@ object Verify {
     Engine.tune(spark) // same declared confs as Bench (ANSI, AQE, UTC, nanos)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev filter: trailing args restrict the dump to named queries
-    // (oracle_sql.json is still written in full — check_oracle --only
-    // narrows the compare side)
+    // trailing args restrict the dump to named queries (oracle_sql.json
+    // is still written in full — check_oracle --only narrows the compare)
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }

@@ -239,7 +239,7 @@ object Dedup {
     * in-row, no exchange). */
   def tokens(docs: DataFrame): DataFrame = explodeToks(tokArrays(docs))
 
-  private[graft] def explodeToks(tokArr: DataFrame): DataFrame =
+  private[ops] def explodeToks(tokArr: DataFrame): DataFrame =
     tokArr.select(col("doc_id"), explode(col("toks")).as("token"))
 
   /** Exact dedup on whitespace-normalized lowercase text: keep min doc_id
@@ -1332,13 +1332,6 @@ object Dedup {
   private[ops] def evalShingleRow(evalDocs: DataFrame, n: Int = 8): DataFrame =
     shinglesOf(evalDocs.select(col("doc_id"), col("text")), n)
       .agg(sort_array(collect_set(col("shingle"))).as("eval_sh"))
-
-  // dev-lab seams (CleanLab) for the private in-row contamination pieces
-  def shingleArrayTestSeam(text: org.apache.spark.sql.Column, n: Int,
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column =
-    shingleArrayExpr(text, n, spark)
-  def evalShingleRowTestSeam(evalDocs: DataFrame): DataFrame =
-    evalShingleRow(evalDocs)
 
   def contamination(docs: DataFrame, evalDocs: DataFrame, n: Int = 8): DataFrame = {
     require(n > 0, s"n must be positive, got $n")

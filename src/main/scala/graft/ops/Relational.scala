@@ -802,7 +802,7 @@ object Relational {
     * counts non-null values directly — the builtin's skip-nulls
     * semantics); groups whose every value column is entirely null are
     * reattached by the final left join so they still yield null rows. */
-  private[graft] def exactPercentilesBySort(df: DataFrame, groupCol: String,
+  private[ops] def exactPercentilesBySort(df: DataFrame, groupCol: String,
       specs: Seq[(String, Seq[(Double, String)])]): DataFrame = {
     val vals = df.select(col(groupCol) +:
       specs.zipWithIndex.map { case ((vc, _), i) => col(vc).cast("double").as(s"v$i") }: _*)

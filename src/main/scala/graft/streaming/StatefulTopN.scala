@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{ItemViewCount, PaneItem, RankedItem}
 
@@ -34,8 +34,9 @@ import graft.model.{ItemViewCount, PaneItem, RankedItem}
   * Scale: state per windowEnd key is one count map, bounded by item
   * cardinality per window and cleared on firing; the pane explode is a
   * constant ×(size/slide) fan-out before the shuffle, identical to
-  * Flink's sliding-window replication cost. Use the RocksDB state store
-  * provider for large windows.
+  * Flink's sliding-window replication cost. For large windows, set
+  * Spark's `spark.sql.streaming.stateStore.providerClass` to the RocksDB
+  * provider; the operator does not change.
   */
 object StatefulTopN {
 
@@ -60,55 +61,6 @@ object StatefulTopN {
       .withWatermark("ts", "0 seconds")
       .select(col("ts"), explode(paneEnds).as("windowEnd"), col("itemId"))
       .as[PaneItem]
-  }
-
-  /** transformWithState form of the same operator (Spark 4's
-    * arbitrary-state API — the successor to flatMapGroupsWithState and
-    * the closest structural match to the reference's KeyedProcessFunction:
-    * named state handles + explicitly registered event-time timers).
-    * State decomposition mirrors Flink's: MapState[itemId → count] per
-    * windowEnd key; one timer at windowEnd+1 (HotItemAnalysis.java:191).
-    * Requires the RocksDB state store provider (the API's only backend —
-    * which is also the SURVEY §7.3-7 posture for large state). */
-  class TopNProcessor(n: Int)
-      extends StatefulProcessor[Long, PaneItem, RankedItem] {
-    @transient private var counts: MapState[Long, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[Long, Long](
-        "counts", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-
-    private def drain(windowEnd: Long): Iterator[RankedItem] = {
-      val items = counts.iterator().map { case (id, c) =>
-        ItemViewCount(id, windowEnd, c)
-      }.toSeq
-      counts.clear()
-      topN(items, n).iterator
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[PaneItem],
-        timerValues: TimerValues): Iterator[RankedItem] = {
-      rows.foreach { r =>
-        val c = if (counts.containsKey(r.itemId)) counts.getValue(r.itemId) else 0L
-        counts.updateValue(r.itemId, c + 1L)
-      }
-      if (timerValues.getCurrentWatermarkInMs() >= key) drain(key) // replay: closed
-      else { getHandle.registerTimer(key + 1); Iterator.empty }
-    }
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[RankedItem] =
-      drain(key)
-  }
-
-  /** [[apply]] via transformWithState. Identical output contract —
-    * HotItemAnalysisJobSpec asserts both forms agree. */
-  def applyTws(paneItems: Dataset[PaneItem], n: Int = 3): Dataset[RankedItem] = {
-    val spark = paneItems.sparkSession
-    import spark.implicits._
-    paneItems
-      .groupByKey(_.windowEnd.getTime)
-      .transformWithState(new TopNProcessor(n), TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** The stateful operator: count per (windowEnd, itemId) in state, emit

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The scaling probes (ScaleSmoke / ScaleExp) rest on one property of
+/** The scaling probes (ScaleSmoke) rest on one property of
   * [[ScaleSmoke.amplify]]: copies have DISJOINT vocabularies, so
   * duplicate structure — and therefore output per unit input — is
   * constant in k and wall-clock growth measures the engine, not output

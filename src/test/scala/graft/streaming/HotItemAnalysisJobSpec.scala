@@ -45,31 +45,6 @@ class HotItemAnalysisJobSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState form matches flatMapGroupsWithState form") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[String]
-      val panes = StatefulTopN.panes(
-        HotItemAnalysisJob.parseCsv(input.toDF()).filter(col("behavior") === "pv"))
-      val q = StatefulTopN.applyTws(panes, n = 3)
-        .writeStream.outputMode("append").format("memory").queryName("jobBtws").start()
-      try {
-        input.addData(window1: _*)
-        q.processAllAvailable()
-        input.addData(csv(9, "pv", 20000))
-        q.processAllAvailable()
-        val got = spark.table("jobBtws").as[RankedItem].collect()
-        val w1 = got.filter(_.windowEnd == 3600000L).sortBy(_.rank)
-        assert(w1.map(r => (r.rank, r.itemId, r.count)).toSeq ==
-          Seq((1, 1L, 3L), (2, 2L, 2L), (3, 3L, 2L)), s"got ${w1.toSeq}")
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-  }
-
   test("stream/batch parity on finalized windows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

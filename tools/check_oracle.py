@@ -108,6 +108,9 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{a.sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{a.outdir}/oracle_sql.json"))
     if a.only:
+        missing = sorted(set(a.only) - set(oracle))
+        if missing:
+            sys.exit(f"unknown queries (not in oracle_sql.json): {' '.join(missing)}")
         oracle = {k: v for k, v in oracle.items() if k in a.only}
     if a.time is not None:
         time_queries(con, oracle, a.outdir, a.time, a.bench)
