@@ -17,17 +17,25 @@ import org.apache.spark.sql.SparkSession
   *     `broadcast()` where we know the dimension is small at any SF.
   *   - `file:` checkpoints are written through [[LocalCheckpointFs]]
   *     (no `readlink`/`chmod` process per checkpoint file).
+  *   - `spark.sql.legacy.parquet.nanosAsLong` stays unset: only
+  *     [[graft.sources.Tables.events]] sets it, for the legacy
+  *     TIMESTAMP(NANOS) events generation.
   *   - Streaming state uses Spark's default store; large state (big
   *     windows, wide Top-N key spaces) can move to RocksDB through
   *     Spark's own `spark.sql.streaming.stateStore.providerClass` conf.
   * [[tune]] sets every runtime conf; [[session]] only the build-time ones.
   */
 object Engine {
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+  /** A local session over `SPARK_GRAFT_CPUS` cores (default: every core
+    * the JVM sees) with as many shuffle partitions — the rule Bench
+    * spells out for itself — plus the build-time confs and [[tune]]. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = tune(SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
@@ -35,7 +43,7 @@ object Engine {
   }
 
   /** Apply the engine defaults to a session, including one created
-    * elsewhere (the Verify/Bench mains create their own). Safe to call on
+    * elsewhere (Bench creates its own). Safe to call on
     * a running session: all of these are runtime-mutable confs. */
   def tune(spark: SparkSession): SparkSession = {
     // ANSI on is the Spark 4 default; pinned so the engine's declared
@@ -43,10 +51,6 @@ object Engine {
     // must be total guard explicitly — see TextOps/SimSearch/parseCsv)
     // don't drift with deployment defaults.
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    // TIMESTAMP(NANOS) parquet columns (events table) read as raw longs
-    // engine-wide; Tables.events owns the ns→µs conversion. Declared here
-    // rather than mutated as a side effect of the first events() call.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")

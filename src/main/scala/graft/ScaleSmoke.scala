@@ -49,7 +49,8 @@ private final class ProbeMetrics extends SparkListener {
   *
   * Usage: sbt "runMain graft.ScaleSmoke [sfDir] [k1,k2,...] [label1,label2,...]"
   * The optional third arg restricts the run to named pipelines (e.g.
-  * "fuzzy_smj,components" for the k=32 knee probe).
+  * "fuzzy_smj,components" for the k=32 knee probe). It runs on
+  * `SPARK_GRAFT_CPUS` cores ([[Engine.session]]).
   */
 object ScaleSmoke {
   def amplify(docs: DataFrame, k: Int): DataFrame =
@@ -96,11 +97,7 @@ object ScaleSmoke {
     val ks = args.drop(1).headOption.getOrElse("1,4,16").split(",").map(_.toInt)
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    Engine.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     val base = graft.sources.Tables.documents(spark, dir)
     base.count() // warm
     val metrics = new ProbeMetrics

@@ -168,7 +168,7 @@ object Tables {
   /** Older fixture generations wrote events.ts as parquet
     * TIMESTAMP(NANOS), which Spark's vectorized reader rejects; the
     * footer's `ts` annotation tells them apart. Only that legacy branch
-    * sets `nanosAsLong` (also declared in Engine.session/tune), reads
+    * sets `nanosAsLong` (no session sets it up front), reads
     * nanos as long and floor-divides to microseconds (`div`: a double
     * roundtrip would lose precision at 1e18 ns), the truncation DuckDB
     * performs. Current fixtures write TIMESTAMP(MICROS) → [[tsUtc]]. */

@@ -31,7 +31,7 @@ object StreamingSmoke {
 
   def main(args: Array[String]): Unit = {
     val inDir = args.headOption.getOrElse("/tmp/drive/jobB_in")
-    val spark = graft.Engine.session("local[4]", shufflePartitions = 4)
+    val spark = graft.Engine.session()
     import spark.implicits._
 
     val lines = spark.readStream.option("maxFilesPerTrigger", "1").text(inDir)

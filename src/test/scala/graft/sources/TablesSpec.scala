@@ -108,6 +108,10 @@ class TablesSpec extends SparkSuite {
       spark.conf.unset(key)
       Tables.events(spark, sf) // current fixtures: TIMESTAMP(MICROS)
       assert(spark.conf.get(key) == "false", "a MICROS events file must not touch the conf")
+      // nor does the engine's own tuning set it up front
+      val tuned = graft.Engine.tune(spark.newSession())
+      Tables.events(tuned, sf)
+      assert(tuned.conf.get(key) == "false", "Engine.tune must leave nanosAsLong unset")
 
       val dir = Files.createTempDirectory("tables_spec_nanos").toFile
       val schema = Types.buildMessage()
