@@ -78,10 +78,6 @@ object EventQueries {
         |FROM spine s JOIN act a
         |ON a.day BETWEEN s.report_day - 29 AND s.report_day
         |GROUP BY s.report_day""".stripMargin)),
-    // the HLL scale branch: per-day sketches replicate through the
-    // window, exact twin in-query, error law emitted as data
-    // approx MAU: oracle recomputes the exact side; the HLL law must
-    // hold as a hash-equal TRUE (the q_agg_approx_distinct pattern)
     // KMV replay: the merged bottom-k of per-day sketches over a
     // trailing window EQUALS the k smallest distinct hashes of the
     // whole window (any union-minimum is its own day's minimum), so

@@ -17,16 +17,25 @@ object StreamingSmoke {
   /** `[stream]` + JSON: the query's batch count and, summed over its
     * `recentProgress`, the micro-batch phase times that carry the sink
     * (`addBatch`) and the checkpoint writes (`walCommit` for the offset
-    * log, `commitOffsets` for the commit log), plus the state stores'
-    * `commitTimeMs`. */
+    * log, `commitOffsets` for the commit log), the state stores'
+    * `commitTimeMs` and the rows dropped as late
+    * (`numRowsDroppedByWatermark`); from the last progress, the state
+    * stores' rows and memory and the event-time watermark (null before
+    * the query has one). */
   def progressLine(q: StreamingQuery): String = {
     val ps = q.recentProgress
     def phase(k: String) = ps.map(_.durationMs.getOrDefault(k, 0L).longValue).sum
-    val stateCommit = ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum
+    val ops = ps.flatMap(_.stateOperators)
+    val lastOps = ps.lastOption.toSeq.flatMap(_.stateOperators)
+    val watermark = ps.lastOption.flatMap(p => Option(p.eventTime.get("watermark")))
+      .fold("null")(w => s""""$w"""")
     val phases = Seq("addBatch", "walCommit", "commitOffsets")
       .map(k => s""""${k}_ms":${phase(k)}""").mkString(",")
     s"""[stream] {"query":"${Option(q.name).getOrElse(q.id)}","batches":${ps.length},""" +
-      s"""$phases,"state_commit_ms":$stateCommit}"""
+      s"""$phases,"state_commit_ms":${ops.map(_.commitTimeMs).sum},""" +
+      s""""late_rows_dropped":${ops.map(_.numRowsDroppedByWatermark).sum},""" +
+      s""""state_rows":${lastOps.map(_.numRowsTotal).sum},""" +
+      s""""state_mem_bytes":${lastOps.map(_.memoryUsedBytes).sum},"watermark":$watermark}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -64,8 +73,7 @@ object StreamingSmoke {
         s"""{"appid":"a9","event_type":1,"timestamp":95,"log_time":95000}""") // wm pusher
         .mkString("\n").getBytes)
     val qa = HotMediaTrackJob.pipeline(
-        spark.readStream.option("maxFilesPerTrigger", "1").text(aDir)
-          .withColumnRenamed("value", "value"))
+        spark.readStream.option("maxFilesPerTrigger", "1").text(aDir))
       .writeStream.outputMode("append").format("memory").queryName("smokeA").start()
     qa.processAllAvailable()
     println(progressLine(qa))

@@ -204,6 +204,7 @@ class LocalCheckpointFsSpec extends SparkSuite {
     assert(progress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum == 1)
     val line = StreamingSmoke.progressLine(restarted)
     assert(line.startsWith("[stream] {") && line.contains("\"state_commit_ms\":"), line)
+    assert(line.contains("\"late_rows_dropped\":1,"), line)
 
     val (w, sp) = (table("media_whole"), table("media_split"))
     def rows(t: Seq[(Timestamp, String, Int, Long, Long)]) = t.map(r => (r._1, r._2, r._3, r._4))

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.sql.Timestamp
+import java.sql.{DriverManager, Timestamp}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -83,6 +84,51 @@ class DurabilitySpec extends SparkSuite {
       .as[(Timestamp, String, Int, Long, Long)].collect().toSet
     assert(afterReplay == afterRun,
       s"replay must be idempotent:\nbefore=$afterRun\nafter=$afterReplay")
+  }
+
+  test("jdbc sink: write.jdbc's table, any column order, no class compiled per batch id") {
+    import spark.implicits._
+    val url = s"jdbc:derby:${Files.createTempDirectory("graft_derby_sink")}/db;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    def wire(appid: String, typ: Int, t: Long): String =
+      s"""{"appid":"$appid","event_type":$typ,"timestamp":$t,"log_time":${t * 1000}}"""
+    // a batch frame with the streaming job's schema and plan shape
+    val frame = HotMediaTrackJob.pipeline(Seq(wire("app1", 1, 100), wire("app1", 1, 101),
+      wire("app2", 2, 100), wire("app1", 1, 160)).toDF("value"))
+    def columns(table: String) = {
+      val conn = DriverManager.getConnection(url, props)
+      try {
+        val rs = conn.getMetaData.getColumns(null, null, table.toUpperCase, null)
+        Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getInt("ORDINAL_POSITION"),
+          r.getString("COLUMN_NAME"), r.getString("TYPE_NAME"), r.getInt("COLUMN_SIZE"),
+          r.getInt("NULLABLE"))).toList.sortBy(_._1)
+      } finally conn.close()
+    }
+    def stored(table: String) = spark.read.jdbc(url, table, props)
+      .select("time", "appid", "type", "count", "batch_id")
+      .as[(Timestamp, String, Int, Long, Long)].collect().toSet
+
+    HotMediaTrackJob.writeBatch(frame, 1, url, "sink_new", props)
+    // the table a literal batch id appended by write.jdbc creates
+    frame.withColumn("batch_id", lit(1L)).write.mode("append").jdbc(url, "sink_ref", props)
+    assert(columns("sink_new").map(_._2) == Seq("time", "appid", "type", "count", "batch_id"))
+    assert(columns("sink_new") == columns("sink_ref"))
+    val first = stored("sink_new")
+    assert(first.size == 3 && first == stored("sink_ref"), first)
+
+    HotMediaTrackJob.writeBatch(frame.select("count", "type", "time", "appid"), 1, url,
+      "sink_reordered", props)
+    assert(stored("sink_reordered") == first)
+    HotMediaTrackJob.writeBatch(frame, 1, url, "sink_new", props) // replay
+    assert(stored("sink_new") == first)
+
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    Seq(7L, 8L, 9L).foreach(id => HotMediaTrackJob.writeBatch(frame, id, url, "sink_new", props))
+    assert(compiles.getCount - before == 0, "a batch id compiled into the plan")
+    assert(stored("sink_new").groupBy(_._5).view.mapValues(_.size).toMap ==
+      Map(1L -> 3, 7L -> 3, 8L -> 3, 9L -> 3))
   }
 
   test("checkpoint recovery: restart resumes exactly-once from a file source") {
