@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.declared._
-import graft.ops.EventWindows
-import graft.sources.Tables
 
 /** Driver contract — see SURVEY.md §7 + FIXTURES.md §3.
   *
@@ -20,10 +18,11 @@ import graft.sources.Tables
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * Job-B replica, batch form: sliding-window counts + per-window top-3. */
+    * The declared q_win_slide_topn — Job-B replica, batch form:
+    * sliding-window counts + per-window top-3. */
   def entry(spark: SparkSession): DataFrame = {
     Engine.tune(spark)
-    EventWindows.slideTopN(Tables.events(spark, "/root/testdata/sf0.001"))
+    queries("q_win_slide_topn")(spark, "/root/testdata/sf0.001")
   }
 
   /** Every declared query, lane by lane. A name declared twice throws

@@ -1,5 +1,7 @@
 package graft.declared
 
+import org.apache.spark.sql.functions.{col, unix_timestamp}
+
 import graft.ops.{BloomJoin, EventWindows, Layout, Relational, Skew}
 import graft.sources.Tables
 
@@ -246,11 +248,17 @@ object RelationalQueries {
         |FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS y, CAST(month(o_orderdate) AS BIGINT) AS m,
         |CAST(day(o_orderdate) AS BIGINT) AS d, date_trunc('month', o_orderdate) AS month_start
         |FROM orders) t GROUP BY y, m, month_start""".stripMargin)),
-    // reference-job replicas (batch form; streaming forms in graft.streaming)
-    Declared("q_win_tumble", (s, d) => EventWindows.tumbleCounts(Tables.events(s, d)), Some(
+    // reference-job replicas: batch twins of the graft.streaming jobs, same EventWindows
+    // definitions; event_type stands in for Job A's (appid, type) key
+    Declared("q_win_tumble", (s, d) => EventWindows.tumbleCounts(Tables.events(s, d), "event_type")
+      .select(unix_timestamp(col("window.end")).as("win_end"), col("event_type"), col("count").as("cnt")), Some(
       """SELECT CAST(floor(epoch_us(ts)/30000000) AS BIGINT)*30 + 30 AS win_end, event_type,
         |count(*) AS cnt FROM events GROUP BY 1, 2""".stripMargin)),
-    Declared("q_win_slide_topn", (s, d) => EventWindows.slideTopN(Tables.events(s, d)), Some(
+    // fanout: the panes replicate each row 12× before the partial aggregate; purchase ≙ Job B's pv
+    Declared("q_win_slide_topn", (s, d) => EventWindows.slideTopN(
+        Tables.fanout(Tables.events(s, d)).filter(col("event_type") === "purchase"), "user_id")
+      .select(unix_timestamp(col("windowEnd")).as("win_end"), col("user_id"), col("count").as("cnt"),
+        col("rank").as("rnk")), Some(
       """WITH counts AS (
         |SELECT (CAST(floor(epoch_us(ts)/300000000) AS BIGINT) - g)*300 + 3600 AS win_end,
         |user_id, count(*) AS cnt

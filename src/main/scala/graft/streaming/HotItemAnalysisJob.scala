@@ -1,10 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-
-import graft.model.RankedItem
 
 /** Job-B replica: HotItemAnalysis (reference HotItemAnalysis.java:61-113).
   *
@@ -13,10 +10,12 @@ import graft.model.RankedItem
   * 1 h sliding window, 5 min slide, count per item (:104-106) →
   * per-windowEnd Top-3 (:107-108, TopNHotItems at :173-223).
   *
-  * The Top-N has two declared forms (SURVEY §2.1 #14):
-  *  - declarative rank-filter (batch / foreachBatch) — [[topNBatch]];
-  *  - incremental stateful operator with per-key event-time timeout —
-  *    [[StatefulTopN]], the faithful ListState+timer translation.
+  * The panes are `EventWindows.slidingPanes`, the definition the batch
+  * query q_win_slide_topn (oracle-checked) calls too. The Top-N has two
+  * declared forms over them (SURVEY §2.1 #14): the batch rank filter
+  * `EventWindows.slideTopN`, and the incremental stateful operator with
+  * per-key event-time timeout — [[StatefulTopN]], the faithful
+  * ListState+timer translation, which this streaming job runs.
   */
 object HotItemAnalysisJob {
 
@@ -47,28 +46,6 @@ object HotItemAnalysisJob {
     val spark = lines.sparkSession
     import spark.implicits._
     parseCsv(lines).as[graft.model.UserBehavior]
-  }
-
-  /** filter(pv) → sliding-window count per item. Returns columns
-    * (itemId, windowEnd: timestamp, count) with windowEnd exclusive —
-    * the ItemViewCount shape (HotItemAnalysis.java:165-169). */
-  def windowCounts(behaviors: DataFrame): DataFrame =
-    behaviors
-      .filter(col("behavior") === "pv")
-      .withColumn("ts", timestamp_millis(col("tsMillis")))
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "1 hour", "5 minutes"), col("itemId"))
-      .agg(count(lit(1)).as("count"))
-      .select(col("itemId"), col("window.end").as("windowEnd"), col("count"))
-
-  /** Declarative Top-N per window end: rank-filter with the declared
-    * deterministic tie-break (count desc, itemId asc — SURVEY §7.3-3;
-    * the reference's arrival-order ties are nondeterministic under
-    * parallelism, a deliberate semantic fix). */
-  def topNBatch(counts: DataFrame, n: Int = 3): DataFrame = {
-    val w = Window.partitionBy(col("windowEnd"))
-      .orderBy(col("count").desc, col("itemId").asc)
-    counts.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
   }
 
   /** Full streaming pipeline with the stateful Top-N operator. */

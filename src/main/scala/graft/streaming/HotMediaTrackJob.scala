@@ -10,6 +10,8 @@ import org.apache.spark.sql.jdbc.JdbcDialects
 
 import scala.jdk.CollectionConverters._
 
+import graft.ops.EventWindows
+
 /** Job-A replica: HotMediaTrack (reference HotMediaTrack.java:45-96).
   *
   * Pipeline: Kafka topic-pattern source → JSON parse to the 5-field
@@ -21,8 +23,10 @@ import scala.jdk.CollectionConverters._
   * partition of each micro-batch, idempotent on batchId, see SURVEY
   * §7.3-6).
   *
-  * Every stage is a pure DataFrame→DataFrame function so the identical
-  * logic runs in batch (oracle-checked via q_win_tumble) and streaming.
+  * The window is `EventWindows.tumbleCounts`, the definition the batch
+  * query q_win_tumble (oracle-checked) calls too; every stage is a pure
+  * DataFrame→DataFrame function, so `pipeline` runs over a stream or a
+  * batch read alike (HotMediaTrackJobSpec checks the two agree).
   */
 object HotMediaTrackJob {
 
@@ -80,22 +84,15 @@ object HotMediaTrackJob {
     parse(raw).as[graft.model.LogTrack]
   }
 
-  /** Event time = receiveTime (HotMediaTrack.java:79-84's ascending
-    * extractor); delay 0 ≙ Flink's maxTs−1ms ascending watermark —
-    * emission timing differs (SURVEY §7.3-1) but final append-mode
-    * contents match. 30 s tumbling count per (appid, type). */
-  def windowCounts(parsed: DataFrame): DataFrame =
-    parsed
-      .withColumn("eventTs", timestamp_millis(col("receiveTime")))
-      .withWatermark("eventTs", "0 seconds")
-      .groupBy(window(col("eventTs"), "30 seconds"), col("appid"), col("type"))
-      .agg(count(lit(1)).as("count"))
-      // Sink row shape per HotMediaTrack.java:116-122: time = window END
-      // (exclusive, ms) as a timestamp — exactly window.end, not end-1.
+  /** Full pipeline on an arbitrary string-valued source. Event time =
+    * receiveTime (HotMediaTrack.java:79-84's ascending extractor), then
+    * the shared 30 s tumbling count per (appid, type). Sink row shape per
+    * HotMediaTrack.java:116-122: time = window END (exclusive, ms) as a
+    * timestamp — exactly window.end, not end-1. */
+  def pipeline(raw: DataFrame): DataFrame =
+    EventWindows.tumbleCounts(
+        parse(raw).withColumn("ts", timestamp_millis(col("receiveTime"))), "appid", "type")
       .select(col("window.end").as("time"), col("appid"), col("type"), col("count"))
-
-  /** Full pipeline on an arbitrary string-valued source. */
-  def pipeline(raw: DataFrame): DataFrame = windowCounts(parse(raw))
 
   /** One micro-batch → JDBC, idempotent on (table, batchId): a replayed
     * batch (sink failure → Structured Streaming re-delivers the same

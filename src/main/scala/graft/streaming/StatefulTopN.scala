@@ -5,14 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{ItemViewCount, PaneItem, RankedItem}
+import graft.ops.EventWindows
 
 /** Stateful sliding-window hot-items: the faithful Spark translation of
   * the reference's window-aggregate + TopNHotItems KeyedProcessFunction
   * pair (HotItemAnalysis.java:104-108, 173-223), fused into one stateful
   * operator:
   *
-  *  - pane assignment (Flink's sliding WindowAssigner) → a stateless
-  *    12-way explode of each event into the panes that contain it;
+  *  - pane assignment (Flink's sliding WindowAssigner) → the shared
+  *    `EventWindows.slidingPanes`: Spark's sliding `window()`, a
+  *    stateless 12-way Expand of each event into the panes that contain
+  *    it;
   *  - per-(windowEnd) count accumulation (Flink's CountAgg ListState)
   *    → GroupState[Map[itemId → count]];
   *  - timer at windowEnd+1 (HotItemAnalysis.java:191)
@@ -32,8 +35,8 @@ import graft.model.{ItemViewCount, PaneItem, RankedItem}
   * Tie-break is deterministic (count desc, itemId asc) — SURVEY §7.3-3.
   *
   * Scale: state per windowEnd key is one count map, bounded by item
-  * cardinality per window and cleared on firing; the pane explode is a
-  * constant ×(size/slide) fan-out before the shuffle, identical to
+  * cardinality per window and cleared on firing; the pane Expand is a
+  * constant 12× (size/slide) fan-out before the shuffle, identical to
   * Flink's sliding-window replication cost. For large windows, set
   * Spark's `spark.sql.streaming.stateStore.providerClass` to the RocksDB
   * provider; the operator does not change.
@@ -45,21 +48,13 @@ object StatefulTopN {
       case (i, idx) => RankedItem(i.windowEnd, idx + 1, i.itemId, i.count)
     }
 
-  /** Pane assignment: one row per (event, containing pane). Pane ends are
-    * epoch-aligned slide multiples; every event falls in exactly
-    * size/slide panes (slide divides size). */
-  def panes(pv: DataFrame, sizeSec: Int = 3600, slideSec: Int = 300): Dataset[PaneItem] = {
+  /** Pane assignment: one row per (page view, containing pane) — the
+    * shared `EventWindows.slidingPanes` over event time `tsMillis`. */
+  def panes(pv: DataFrame): Dataset[PaneItem] = {
     val spark = pv.sparkSession
     import spark.implicits._
-    val nPanes = sizeSec / slideSec
-    val slideMs = slideSec * 1000L
-    val paneEnds = transform(sequence(lit(0), lit(nPanes - 1)), g =>
-      timestamp_millis(
-        (floor(col("tsMillis") / slideMs).cast("long") * slideMs)
-          + lit(sizeSec * 1000L) - g.cast("long") * slideMs))
-    pv.withColumn("ts", timestamp_millis(col("tsMillis")))
-      .withWatermark("ts", "0 seconds")
-      .select(col("ts"), explode(paneEnds).as("windowEnd"), col("itemId"))
+    EventWindows.slidingPanes(pv.withColumn("ts", timestamp_millis(col("tsMillis"))))
+      .select(col("ts"), col("windowEnd"), col("itemId"))
       .as[PaneItem]
   }
 

@@ -13,4 +13,14 @@ class ExplainSpec extends SparkSuite {
     assert(Explain.plan(a) == Explain.plan(b))
     assert(Explain.plan(a).contains("TopKAgg@hash"))
   }
+
+  test("Explain.explain: a query explains the same after a build that cached its frames") {
+    // explained right after another build of itself, q_mau_approx would
+    // read that build's cached frames (an InMemoryRelation over its
+    // attributes) unless the caches are released between queries
+    val build = SparkEntry.queries("q_mau_approx")
+    val first = Explain.explain(spark, sf, build)
+    assert(!first.startsWith("ERROR"), first)
+    assert(Explain.explain(spark, sf, build) == first)
+  }
 }

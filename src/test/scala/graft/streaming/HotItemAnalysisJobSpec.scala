@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.model.RankedItem
+import graft.ops.EventWindows
 
 /** Job-B semantics (FIXTURES.md §1.2): pv filter, sliding panes, stateful
   * Top-3 with deterministic tie-break, stream/batch parity. */
@@ -61,12 +62,14 @@ class HotItemAnalysisJobSpec extends SparkSuite {
     val streamed = spark.table("jobBp").as[RankedItem].collect()
       .filter(_.windowEnd <= wmPusherTs * 1000).toSet
 
-    val batch = HotItemAnalysisJob.topNBatch(
-        HotItemAnalysisJob.windowCounts(
-          HotItemAnalysisJob.parseCsv(window1.toDF("value"))), 3)
-      .select(col("windowEnd"), col("rank"), col("itemId"), col("count"))
-      .as[(java.sql.Timestamp, Int, Long, Long)].collect()
-      .map { case (we, r, i, c) => RankedItem(we.getTime, r, i, c) }
+    // the batch rank filter over the panes the streamed job uses
+    val pv = HotItemAnalysisJob.parseCsv(window1.toDF("value"))
+      .filter(col("behavior") === "pv")
+      .withColumn("ts", timestamp_millis(col("tsMillis")))
+    val batch = EventWindows.slideTopN(pv, "itemId", 3)
+      .select(unix_millis(col("windowEnd")).as("windowEnd"), col("rank").cast("int").as("rank"),
+        col("itemId"), col("count"))
+      .as[RankedItem].collect()
       .filter(_.windowEnd <= wmPusherTs * 1000).toSet
 
     assert(streamed == batch,

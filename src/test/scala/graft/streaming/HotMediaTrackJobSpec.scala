@@ -50,6 +50,39 @@ class HotMediaTrackJobSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("stream/batch parity on finalized windows, over one file source") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobA_parity")
+    def put(name: String, lines: Seq[String]): Unit = { // atomically: the stream may list any time
+      val tmp = java.nio.file.Files.writeString(
+        java.nio.file.Files.createTempFile("graft_jobA", ".tmp"), lines.mkString("\n"))
+      java.nio.file.Files.move(tmp, dir.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    // disordered within the micro-batch, across three windows and
+    // keys, plus a record the parse drops (no log_time)
+    put("1.json", Seq(
+      js("a1", 2, 45000), js("a1", 2, 10000), js("a2", 3, 29999),
+      js("a1", 2, 30000), js("a2", 1, 61000), js("a1", 2, 12000, eventTime = Some(11)),
+      """{"appid": "a3", "event_type": 1, "timestamp": 30}"""))
+    val wmPusherMs = 95000L
+    val q = HotMediaTrackJob.pipeline(spark.readStream.text(dir.toString))
+      .writeStream.outputMode("append").format("memory").queryName("jobAp").start()
+    try {
+      q.processAllAvailable()
+      put("2.json", Seq(js("a9", 1, wmPusherMs)))
+      q.processAllAvailable()
+    } finally q.stop()
+    def finalized(df: org.apache.spark.sql.DataFrame) =
+      df.select(unix_millis(col("time")), col("appid"), col("type"), col("count"))
+        .as[(Long, String, Int, Long)].collect().filter(_._1 <= wmPusherMs).toSet
+
+    val streamed = finalized(spark.table("jobAp"))
+    val batch = finalized(HotMediaTrackJob.pipeline(spark.read.text(dir.toString)))
+    assert(streamed.size == 4, s"got $streamed")
+    assert(streamed == batch,
+      s"stream-only: ${streamed -- batch}; batch-only: ${batch -- streamed}")
+  }
+
   test("parse: projection, unit normalization, unknown fields ignored") {
     import spark.implicits._
     val raw = Seq(

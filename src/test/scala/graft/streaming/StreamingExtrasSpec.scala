@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.ops.EventWindows
 
 /** Streaming operators beyond the two reference jobs (SURVEY §2.4
   * "Streaming" row): session windows and watermarked stream dedup —
@@ -18,14 +19,8 @@ class StreamingExtrasSpec extends SparkSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp)]
-    val sessions = input.toDF().toDF("user_id", "ts")
-      .withWatermark("ts", "0 seconds")
-      .groupBy(session_window(col("ts"), "60 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_timestamp(col("session_window.start")).as("start_s"),
-        unix_timestamp(col("session_window.end")).as("end_s"),
-        col("n_events"))
+    // the batch query q_win_session's definition, streamed
+    val sessions = EventWindows.sessionCounts(input.toDF().toDF("user_id", "ts"), "60 seconds")
     val q = sessions.writeStream.outputMode("append")
       .format("memory").queryName("sessions").start()
     try {
@@ -40,9 +35,10 @@ class StreamingExtrasSpec extends SparkSuite {
 
       val rows = spark.table("sessions")
         .as[(Long, Long, Long, Long)].collect().toSet
-      assert(rows.contains((1L, 0L, 119L, 3L)), s"merged session, got $rows")
-      assert(rows.contains((1L, 200L, 260L, 1L)))
-      assert(rows.contains((2L, 10L, 70L, 1L)))
+      val sec = 1000000L // one second in µs
+      assert(rows.contains((1L, 0L, 119 * sec, 3L)), s"merged session, got $rows")
+      assert(rows.contains((1L, 200 * sec, 260 * sec, 1L)))
+      assert(rows.contains((2L, 10 * sec, 70 * sec, 1L)))
     } finally q.stop()
   }
 
