@@ -103,15 +103,14 @@ object CmsIndex {
     DirSwap.reset(docs.sparkSession, s"$dir/sketch")
     sketchOf(termCounts(docs))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/sketch")
-    docs.sparkSession.range(1)
-      .select(lit(Depth).as("depth"), lit(Width).as("width"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir,
+      lit(Depth).as("depth"), lit(Width).as("width"))
   }
 
   /** Fold newly ingested documents in — one additive partial-file
     * append (the reader re-aggregates). Single-writer discipline. */
   def appendToCmsIndex(newDocs: DataFrame, dir: String): Unit = {
-    val meta = newDocs.sparkSession.read.parquet(s"$dir/meta").head()
+    val meta = IndexRead.meta(newDocs.sparkSession, dir)
     require(meta.getAs[Int]("depth") == Depth && meta.getAs[Int]("width") == Width,
       s"CMS index at $dir was built with different parameters " +
         s"(${meta.getAs[Int]("depth")}×${meta.getAs[Int]("width")}); " +

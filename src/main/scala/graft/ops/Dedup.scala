@@ -536,15 +536,13 @@ object Dedup {
       tokSetsOf(tokArr)
         .withColumn("doc_id", col("doc_id").cast("long"))
         .write.mode("overwrite").parquet(s"$dir/toksets")
-      docs.sparkSession.range(1)
-        .select(lit(nBuckets).as("band_buckets"))
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      // same-session rewrite with a different bandBuckets must not
-      // depend on the filesystem stamp moving (symmetry with
-      // writeSpanMeta) — drop the memo explicitly
-      bandMeta.invalidate(docs.sparkSession)(_ == dir)
+      IndexRead.writeMeta(docs.sparkSession, dir, lit(nBuckets).as("band_buckets"))
     } finally tokArr.unpersist()
   }
+
+  private def readBandBuckets(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Int =
+    IndexRead.meta(spark, dir).getAs[Int]("band_buckets")
 
   /** Fold newly ingested documents INTO a persisted index — the write
     * half of the production ingestion loop ([[nearDupsAgainstIndex]] is
@@ -555,17 +553,6 @@ object Dedup {
     * new files in existing (or new) bkt= partitions — no rewrite of
     * prior data, safe to run per micro-batch. Ids must stay disjoint
     * from what the index already holds (same contract as the lookup). */
-  // The band index's one-int meta, memoized per (session, dir): the raw
-  // `.first()` is a full Spark job — ~0.5 s of every incremental
-  // lookup's fixed floor (IncrLab). Shared [[MetaMemo]] discipline.
-  private val bandMeta = new MetaMemo[String, Int]
-
-  private[ops] def readBandBuckets(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    bandMeta.getOrRead(spark, dir, metaStamp(spark, dir)) {
-      spark.read.parquet(s"$dir/meta").first().getAs[Int]("band_buckets")
-    }
-
   def appendToNearDupIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
     val bandBuckets = readBandBuckets(spark, dir)
@@ -641,6 +628,23 @@ object Dedup {
     Tombstones.append(dir, Tombstones.fresh(spark, dir, victims))
   }
 
+  /** The index's band rows minus tombstoned docs — the one band read
+    * both lookups go through, so a forgotten doc never becomes a
+    * candidate. No extra join while the index never saw a delete. The
+    * deletes resolve first and the data dir inside the by-name argument
+    * (see [[Tombstones.minus]]). */
+  private def liveBands(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    Tombstones.minus(spark, dir,
+      spark.read.schema(BandsSchema)
+        .parquet(DirSwap.resolve(spark, s"$dir/bands")))
+
+  /** The bkt partition of each of `bands`' rows (the writer's bucket
+    * function, from the index meta) — the prune keys of a band lookup. */
+  private def bandKeys(spark: org.apache.spark.sql.SparkSession,
+      bands: DataFrame, dir: String): DataFrame =
+    bands.select(pmod(col("b0"), lit(readBandBuckets(spark, dir).toLong)))
+
   /** Near-duplicate pairs between a (small) delta of NEW documents and a
     * persisted [[writeNearDupIndex]] corpus: (doc_a = new id, doc_b =
     * indexed id, jaccard ≥ threshold). Ids must be disjoint between the
@@ -649,11 +653,11 @@ object Dedup {
     *
     * Scale shape: the delta's band table and token dictionary are
     * delta-sized → BROADCAST both. The bands read is PARTITION-PRUNED
-    * to the buckets the delta's own bands hash into (the delta's bucket
-    * set is metadata-sized — ≤ min(4·|delta|, bandBuckets) longs — so
-    * collecting it to drive static pruning is a bounded driver
-    * round-trip, same class as the IVF probed-cell list); pruned
-    * partitions stream through a broadcast-hash join (no index shuffle,
+    * to the buckets the delta's own bands hash into
+    * ([[IndexRead.touched]], ≤ min(4·|delta|, bandBuckets) buckets),
+    * behind the `smallIndexBytes` footprint gate ([[IndexRead.small]]),
+    * and tombstoned docs are anti-joined out of it; pruned partitions
+    * stream through a broadcast-hash join (no index shuffle,
     * no index-side sort), and only candidate rows — index docs sharing
     * a band with some new doc — survive to the verify join, which AQE
     * plans as broadcast-hash too while the candidate set is small and
@@ -678,42 +682,15 @@ object Dedup {
     val tokArr = PipelineCaches.track(tokArrays(spread(newDocs)))
     val newBands = PipelineCaches.track(bandsOf(signatures(tokArr))
       .withColumnRenamed("doc_id", "doc_a"))
-    val bandBuckets = readBandBuckets(spark, dir)
-    // the touched-bucket prune costs one extra delta-sized Spark job, so
-    // it is size-gated on the index footprint (a driver filesystem stat,
-    // no job — same gate as spanDedupAgainstIndex): below the gate a
-    // full bands read is cheaper than the job that would prune it; above
-    // it, pruning is what keeps micro-batch lookups independent of
-    // corpus size
-    // tombstone exclusion (forgetFromNearDupIndex): a deleted doc's
-    // bands never become candidates; no-op (no extra join) when the
-    // index never saw a delete. TOMBSTONES RESOLVE FIRST, the data dir
-    // inside the by-name rows argument (round-17 ADVICE: data-first
-    // paired an old un-purged generation with a freshly-cleared deletes
-    // table when a compaction committed in the gap).
-    val bandsRead = Tombstones.minus(spark, dir,
-      spark.read.schema(BandsSchema)
-        .parquet(DirSwap.resolve(spark, s"$dir/bands")))
-    // the size gate's stat walk AFTER the deletes resolve (it is a
-    // heuristic either way — any generation's footprint serves)
-    val bandsPath = new org.apache.hadoop.fs.Path(
-      DirSwap.resolve(spark, s"$dir/bands"))
-    val indexBytes = bandsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(bandsPath).getLength
+    val bandsRead = liveBands(spark, dir)
     val prunedBands =
       // un-pruned branch: fanout — the one-file-per-bucket layout
       // bin-packs into few scan tasks (openCost packing) and the verify
       // chain inherits that; the PRUNED branch must NOT repartition or
       // it loses the PartitionFilters pushdown it exists for
-      if (indexBytes < smallIndexBytes) graft.sources.Tables.fanout(bandsRead)
-      else {
-        // one extra delta-sized pass to learn which buckets the delta
-        // can touch; its distinct is ≤ bandBuckets values
-        val touched = newBands
-          .select(pmod(col("b0"), lit(bandBuckets.toLong)).as("bkt"))
-          .distinct().collect().map(_.getLong(0))
-        bandsRead.filter(col("bkt").isin(touched: _*))
-      }
+      if (IndexRead.small(spark, s"$dir/bands", smallIndexBytes))
+        graft.sources.Tables.fanout(bandsRead)
+      else IndexRead.touched(bandsRead, bandKeys(spark, newBands, dir), "bkt")
     val candRaw = prunedBands
       .join(broadcast(newBands), Seq("band", "b0", "b1"))
       .filter(col("doc_a") =!= col("doc_id"))
@@ -836,20 +813,17 @@ object Dedup {
     * edit-distance verify runs against `corpusTexts` (the index stores
     * hashed token sets, not text, so the caller supplies the (doc_id,
     * text) table — at deployment, bucketed by doc_id so the text join is
-    * exchange-free on the corpus side). Ids must be disjoint between
-    * probes and the index (equal ids are excluded, not verified). */
+    * exchange-free on the corpus side). The band read is
+    * [[nearDupsAgainstIndex]]'s, pruned and without forgotten docs, but
+    * never gated: it always prunes. Ids must be disjoint between probes
+    * and the index (equal ids are excluded, not verified). */
   def fuzzyMatchAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       probes: DataFrame, dir: String, corpusTexts: DataFrame,
       simThreshold: Double = 0.8, capChars: Int = 127): DataFrame = {
     val probeBands = PipelineCaches.track(bandsOf(signatures(tokArrays(probes)))
       .withColumnRenamed("doc_id", "probe_id"))
-    val bandBuckets = readBandBuckets(spark, dir)
-    val touched = probeBands
-      .select(pmod(col("b0"), lit(bandBuckets.toLong)).as("bkt"))
-      .distinct().collect().map(_.getLong(0))
-    val cand = spark.read.schema(BandsSchema)
-      .parquet(DirSwap.resolve(spark, s"$dir/bands"))
-      .filter(col("bkt").isin(touched.toIndexedSeq: _*))
+    val cand = IndexRead.touched(liveBands(spark, dir),
+        bandKeys(spark, probeBands, dir), "bkt")
       .join(broadcast(probeBands), Seq("band", "b0", "b1"))
       .filter(col("probe_id") =!= col("doc_id"))
       .select(col("probe_id"), col("doc_id").as("match_id"))
@@ -1103,25 +1077,15 @@ object Dedup {
     bucketedWinnowFps(docs, k, w, nBuckets)
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/fps")
-    docs.sparkSession.range(1)
-      .select(lit(nBuckets).as("fp_buckets"), lit(k).as("k"), lit(w).as("w"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    // same-session rewrite must not depend on the filesystem stamp
-    // moving (the writeNearDupIndex/writeSpanMeta discipline)
-    winnowMeta.invalidate(docs.sparkSession)(_ == dir)
+    IndexRead.writeMeta(docs.sparkSession, dir,
+      lit(nBuckets).as("fp_buckets"), lit(k).as("k"), lit(w).as("w"))
   }
 
-  /** (fpBuckets, k, w), memoized per (session, dir) — the raw `.first()`
-    * is a full Spark job, the same fixed floor the band/span meta memos
-    * shave (IncrLab). Shared [[MetaMemo]] discipline. */
-  private val winnowMeta = new MetaMemo[String, (Int, Int, Int)]
-
   private def readWinnowMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int) =
-    winnowMeta.getOrRead(spark, dir, metaStamp(spark, dir)) {
-      val r = spark.read.parquet(s"$dir/meta").first()
-      (r.getAs[Int]("fp_buckets"), r.getAs[Int]("k"), r.getAs[Int]("w"))
-    }
+      dir: String): (Int, Int, Int) = {
+    val r = IndexRead.meta(spark, dir)
+    (r.getAs[Int]("fp_buckets"), r.getAs[Int]("k"), r.getAs[Int]("w"))
+  }
 
   /** Append half of the winnow ingestion loop: new files into existing
     * bkt= partitions, no rewrite of prior data, per-micro-batch safe.
@@ -1169,9 +1133,8 @@ object Dedup {
     *
     * Scale shape: the delta's fingerprint table is delta-sized →
     * broadcast into the pruned index read (no index shuffle); the
-    * touched-bucket prune is size-gated on the index footprint exactly
-    * like [[nearDupsAgainstIndex]] (below the gate a full read is
-    * cheaper than the delta-sized job that prunes it). */
+    * touched-bucket prune ([[IndexRead.touched]]) sits behind the
+    * `smallIndexBytes` footprint gate ([[IndexRead.small]]). */
   def winnowAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, dir: String,
       maxDf: Int = 50, minShared: Int = 2,
@@ -1189,22 +1152,14 @@ object Dedup {
     val fpsRead = Tombstones.minus(spark, dir,
       spark.read.schema(WinnowFpsSchema)
         .parquet(DirSwap.resolve(spark, s"$dir/fps")))
-    val fpsPath = new org.apache.hadoop.fs.Path(
-      DirSwap.resolve(spark, s"$dir/fps"))
-    val indexBytes = fpsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(fpsPath).getLength
     val pruned =
       // NO fanout here, unlike nearDupsAgainstIndex: this lookup's
       // post-scan work is hash joins and counts (no per-row DP), so the
       // repartition exchange costs more than the parallelism it buys
       // (measured +0.4 s at sf0.1)
-      if (indexBytes < smallIndexBytes) fpsRead
-      else {
-        val touched = deltaFps
-          .select(pmod(col("fp"), lit(fpBuckets.toLong)).as("bkt"))
-          .distinct().collect().map(_.getLong(0))
-        fpsRead.filter(col("bkt").isin(touched: _*))
-      }
+      if (IndexRead.small(spark, s"$dir/fps", smallIndexBytes)) fpsRead
+      else IndexRead.touched(fpsRead,
+        deltaFps.select(pmod(col("fp"), lit(fpBuckets.toLong))), "bkt")
     // exact union df per fingerprint the delta carries: corpus-side
     // occurrences from the pruned read + the delta's own. Tracked: the
     // df count and the pair join both consume this candidate-sized
@@ -1735,114 +1690,22 @@ object Dedup {
   private case class SpanMeta(w: Int, spanBuckets: Int, freqCap: Long,
       nFrequent: Long)
 
-  // Meta rows are one tiny parquet read but still a full Spark job
-  // (~0.1 s of the incremental path's fixed floor) — memoized per
-  // (session, dir) under the shared [[MetaMemo]] discipline.
-  private val spanMeta = new MetaMemo[String, SpanMeta]
-
-  /** Version stamp of an index's meta dir — a driver filesystem stat,
-    * no Spark job. The memos below validate against it, so a writer in
-    * ANOTHER session or process (which cannot reach this JVM-session's
-    * WeakHashMap invalidation) still flips readers to fresh state on
-    * their next call. The stamp folds every meta FILE's name, length
-    * and mtime (not the directory's mtime): object stores synthesize
-    * directory mtimes that never move on overwrite, and a rewrite
-    * within one coarse-filesystem tick keeps a directory stamp
-    * unchanged — per-file name+length catches both (an overwrite
-    * rewrites part files under fresh task-UUID names). Returns
-    * [[StampUnknown]] when the listing fails or degenerates; callers
-    * must then bypass their memo entirely (read fresh, cache nothing). */
-  private val StampUnknown = 0L
-
-  /** Stamp-validated per-(session, key) memo — the ONE discipline every
-    * index-meta / resident-set cache here follows (band buckets, winnow
-    * geometry, span meta, resident boilerplate arrays): entries carry
-    * the meta stamp they were computed at and are ignored once it moves
-    * (cross-session/process writers are seen); an unverifiable stamp
-    * ([[StampUnknown]]) bypasses the memo entirely — read fresh, cache
-    * nothing. The read runs OUTSIDE the lock (it is a full Spark job; a
-    * racing recompute is benign, last put wins). Weakly keyed so
-    * stopped sessions don't pin. Same-session writers ALSO invalidate
-    * explicitly, so freshness never hangs on the stamp alone. */
-  private[ops] final class MetaMemo[K, T] {
-    private val cache = new java.util.WeakHashMap[
-      org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[K, (Long, T)]]
-    def invalidate(spark: org.apache.spark.sql.SparkSession)(
-        pred: K => Boolean): Unit = cache.synchronized {
-      Option(cache.get(spark)).foreach(_.filterInPlace((k, _) => !pred(k)))
-    }
-    def getOrRead(spark: org.apache.spark.sql.SparkSession, key: K,
-        stamp: Long)(read: => T): T = {
-      val cached =
-        if (stamp == StampUnknown) None
-        else cache.synchronized {
-          Option(cache.get(spark)).flatMap(_.get(key))
-            .collect { case (s, m) if s == stamp => m }
-        }
-      cached.getOrElse {
-        val m = read
-        if (stamp != StampUnknown) cache.synchronized {
-          val perKey = Option(cache.get(spark)).getOrElse {
-            val x = scala.collection.mutable.Map.empty[K, (Long, T)]
-            cache.put(spark, x); x
-          }
-          perKey.put(key, (stamp, m))
-        }
-        m
-      }
-    }
-  }
-
-  private[ops] def metaStamp(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    try {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var h = 1125899906842597L
-      fs.listStatus(p).filter(_.isFile)
-        .sortBy(_.getPath.getName).foreach { st =>
-          h = h * 31 + st.getPath.getName.hashCode
-          h = h * 31 + st.getLen
-          h = h * 31 + st.getModificationTime
-        }
-      if (h == StampUnknown) h + 1 else h
-    } catch { case _: java.io.IOException => StampUnknown }
-  }
-
   private def readSpanMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): SpanMeta =
-    spanMeta.getOrRead(spark, dir, metaStamp(spark, dir)) {
-      val row = spark.read.parquet(s"$dir/meta").first()
-      // indexes written before the cardinality lanes existed read as
-      // stale (-1): eager-count fallback, not a schema error
-      val hasFreq = row.schema.fieldNames.contains("freq_cap")
-      SpanMeta(row.getAs[Int]("w"), row.getAs[Int]("span_buckets"),
-        if (hasFreq) row.getAs[Long]("freq_cap") else -1L,
-        if (hasFreq) row.getAs[Long]("n_frequent") else -1L)
-    }
+      dir: String): SpanMeta = {
+    val row = IndexRead.meta(spark, dir)
+    // indexes written before the cardinality lanes existed read as
+    // stale (-1): eager-count fallback, not a schema error
+    val hasFreq = row.schema.fieldNames.contains("freq_cap")
+    SpanMeta(row.getAs[Int]("w"), row.getAs[Int]("span_buckets"),
+      if (hasFreq) row.getAs[Long]("freq_cap") else -1L,
+      if (hasFreq) row.getAs[Long]("n_frequent") else -1L)
+  }
 
   private def writeSpanMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, meta: SpanMeta): Unit = {
-    spark.range(1)
-      .select(lit(meta.w).as("w"), lit(meta.spanBuckets).as("span_buckets"),
-        lit(meta.freqCap).as("freq_cap"), lit(meta.nFrequent).as("n_frequent"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    spanMeta.invalidate(spark)(_ == dir)
-    spanFreq.invalidate(spark)(_._1 == dir)
-  }
-
-  /** Standing boilerplate-set memo — the steady state of the production
-    * micro-batch loop: when the frequent set is broadcast-sized (the
-    * meta gate proved it), keep the collected hash array resident
-    * per (session, dir, cap) between deltas instead of re-reading the
-    * index every clean. Driver memory ≤ maxFrequentBroadcast longs per
-    * entry. Entries carry the meta stamp they were computed at
-    * and are ignored once the stamp moves, so cross-session/process
-    * writers are seen; same-session writers additionally invalidate
-    * through [[writeSpanMeta]]. Weakly keyed so stopped sessions don't
-    * pin. */
-  private val spanFreq = new MetaMemo[(String, Long), Array[Long]]
+      dir: String, meta: SpanMeta): Unit =
+    IndexRead.writeMeta(spark, dir,
+      lit(meta.w).as("w"), lit(meta.spanBuckets).as("span_buckets"),
+      lit(meta.freqCap).as("freq_cap"), lit(meta.nFrequent).as("n_frequent"))
 
   /** The span count rows with any [[ForgetLedger]] contributions
     * negated in — the ONE read every span-index consumer (frequent
@@ -1991,12 +1854,8 @@ object Dedup {
     * a metadata-sized collect, effective for micro-batch-sized deltas,
     * a full scan in the worst case); sum(c) re-aggregates the appended
     * partials; the filter stage is [[applySpanFilter]]'s gate. The
-    * pruning list itself costs one delta-sized Spark job, so it is
-    * size-gated on the INDEX's on-disk footprint (a driver filesystem
-    * stat, no job): below `smallIndexBytes` a full index read is
-    * cheaper than the job that would prune it — above, the touched-
-    * bucket prune is what makes micro-batch cleans independent of
-    * corpus size. */
+    * prune ([[IndexRead.touched]]) sits behind the `smallIndexBytes`
+    * footprint gate ([[IndexRead.small]]). */
   def spanDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       delta: DataFrame, dir: String, cap: Long = 2,
       maxFrequentBroadcast: Long = 100000,
@@ -2006,13 +1865,13 @@ object Dedup {
     val (w, spanBuckets) = (meta.w, meta.spanBuckets)
     // STEADY-STATE fast path: when meta proves the GLOBAL frequent set
     // is broadcast-sized, serve the clean from the resident boilerplate
-    // array ([[spanFreq]] memo) — the index is read once per
-    // (session, dir, cap) and every subsequent delta pays ONLY its own
-    // map-side pass. This is the per-micro-batch cost of the production
-    // loop; writers invalidate both memos.
+    // array (≤ maxFrequentBroadcast longs, an IndexRead.resident) — the
+    // index is read once per (session, dir, cap) and every subsequent
+    // delta pays ONLY its own map-side pass. This is the per-micro-batch
+    // cost of the production loop; every meta write drops the array.
     if (meta.freqCap == cap && meta.nFrequent >= 0 &&
       meta.nFrequent <= maxFrequentBroadcast) {
-      val hashes = spanFreq.getOrRead(spark, (dir, cap), metaStamp(spark, dir)) {
+      val hashes = IndexRead.resident(spark, dir, s"span_freq@$cap") {
         freqTableFor(spark, dir, cap).collect().map(_.getLong(0))
       }
       val boiler = spark.createDataFrame(
@@ -2025,25 +1884,17 @@ object Dedup {
       return applyBoilerFrame(withSpansOf(delta, w), boiler)
     }
     // eager path (stale / cap-mismatched / oversized frequent set): the
-    // touched-bucket prune costs one delta-sized job, so it is gated on
-    // the index footprint (a driver filesystem stat, no job) — below
-    // `smallIndexBytes` a full read is cheaper than the job that would
-    // prune it. The delta frame is cached only when the prune consumes
-    // it a second time.
-    val spansPath = new org.apache.hadoop.fs.Path(
-      DirSwap.resolve(spark, s"$dir/spans"))
-    val indexBytes = spansPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(spansPath).getLength
+    // touched-bucket prune behind the footprint gate. The delta frame is
+    // cached only when the prune consumes it a second time.
+    val small = IndexRead.small(spark, s"$dir/spans", smallIndexBytes)
     val spansRead = spanCountRows(spark, dir)
     val (withSpans, pruned) =
-      if (indexBytes < smallIndexBytes) (withSpansOf(delta, w), spansRead)
+      if (small) (withSpansOf(delta, w), spansRead)
       else {
         val tracked = PipelineCaches.track(withSpansOf(delta, w))
-        val touched = tracked
-          .select(explode(transform(col("spans"),
-            s => pmod(md5Prefix(s, spark, 15), lit(spanBuckets.toLong)))).as("bkt"))
-          .distinct().collect().map(_.getLong(0))
-        (tracked, spansRead.filter(col("bkt").isin(touched.toSeq: _*)))
+        (tracked, IndexRead.touched(spansRead,
+          tracked.select(explode(transform(col("spans"),
+            s => pmod(md5Prefix(s, spark, 15), lit(spanBuckets.toLong))))), "bkt"))
       }
     val freq = pruned
       .groupBy(col("h")).agg(sum(col("c")).as("c"))
@@ -2157,22 +2008,10 @@ object Dedup {
 
   private case class GramMeta(minLen: Int, gramBuckets: Int)
 
-  private val gramMeta = new MetaMemo[String, GramMeta]
-
   private def readGramMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): GramMeta =
-    gramMeta.getOrRead(spark, dir, metaStamp(spark, dir)) {
-      val r = spark.read.parquet(s"$dir/meta").first()
-      GramMeta(r.getAs[Int]("min_len"), r.getAs[Int]("gram_buckets"))
-    }
-
-  private def writeGramMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, meta: GramMeta): Unit = {
-    spark.range(1)
-      .select(lit(meta.minLen).as("min_len"),
-        lit(meta.gramBuckets).as("gram_buckets"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    gramMeta.invalidate(spark)(_ == dir)
+      dir: String): GramMeta = {
+    val r = IndexRead.meta(spark, dir)
+    GramMeta(r.getAs[Int]("min_len"), r.getAs[Int]("gram_buckets"))
   }
 
   /** The SIXTH persisted index — gram-frequency for incremental
@@ -2194,7 +2033,8 @@ object Dedup {
       .withColumn("bkt", pmod(col("h"), lit(nBuckets.toLong)))
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/grams")
-    writeGramMeta(docs.sparkSession, dir, GramMeta(minLen, nBuckets))
+    IndexRead.writeMeta(docs.sparkSession, dir,
+      lit(minLen).as("min_len"), lit(nBuckets).as("gram_buckets"))
   }
 
   /** Fold newly ingested documents into a persisted gram index — counts
@@ -2256,7 +2096,6 @@ object Dedup {
     * crash drills) as every index here. */
   def compactSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val meta = readGramMeta(spark, dir)
     DirSwap(spark, s"$dir/grams") { out =>
       gramCountRows(spark, dir)
         .groupBy(col("h"), col("bkt")).agg(sum(col("c")).as("c"))
@@ -2265,7 +2104,6 @@ object Dedup {
         .repartition(col("bkt"))
         .write.partitionBy("bkt").parquet(out)
     }
-    gramMeta.invalidate(spark)(_ == dir)
   }
 
   /** Exact-substring-dedup a delta of NEW documents against a persisted
@@ -2275,10 +2113,8 @@ object Dedup {
     * restricted to the delta's rows (SubstringDedupSpec pins the law).
     *
     * Scale shape: the delta's gram table is delta-sized; its touched
-    * buckets (≤ distinct delta grams, metadata-sized) drive a
-    * partition-PRUNED index read (the bounded driver round-trip every
-    * pruned lookup here uses, gated on the index footprint — below
-    * `smallIndexBytes` a full read beats the extra pruning job); the
+    * buckets drive a partition-PRUNED index read ([[IndexRead.touched]]
+    * behind the `smallIndexBytes` gate, [[IndexRead.small]]); the
     * pruned counts join the delta's gram hashes (AQE broadcasts the
     * delta side), and the excision tail is the batch operator's own. */
   def substringDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
@@ -2287,19 +2123,12 @@ object Dedup {
     val meta = readGramMeta(spark, dir)
     val toks = PipelineCaches.track(substrToksOf(delta))
     val grams = PipelineCaches.track(substrGramsOf(toks, meta.minLen))
-    val gramsPath = new org.apache.hadoop.fs.Path(
-      DirSwap.resolve(spark, s"$dir/grams"))
-    val indexBytes = gramsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(gramsPath).getLength
+    val small = IndexRead.small(spark, s"$dir/grams", smallIndexBytes)
     val gramsRead = gramCountRows(spark, dir)
     val pruned =
-      if (indexBytes < smallIndexBytes) gramsRead
-      else {
-        val touched = grams
-          .select(pmod(col("gh"), lit(meta.gramBuckets.toLong)).as("bkt"))
-          .distinct().collect().map(_.getLong(0))
-        gramsRead.filter(col("bkt").isin(touched.toSeq: _*))
-      }
+      if (small) gramsRead
+      else IndexRead.touched(gramsRead,
+        grams.select(pmod(col("gh"), lit(meta.gramBuckets.toLong))), "bkt")
     val idxCounts = pruned.groupBy(col("h")).agg(sum(col("c")).as("idx_c"))
     val dupGh = grams.groupBy(col("gh")).agg(count(lit(1)).as("delta_c"))
       .join(idxCounts.select(col("h").as("gh"), col("idx_c")), Seq("gh"), "left")

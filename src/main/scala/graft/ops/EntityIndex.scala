@@ -48,12 +48,11 @@ object EntityIndex {
     partials(docs, buckets)
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/rows")
-    docs.sparkSession.range(1).select(lit(buckets).as("buckets"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(buckets).as("buckets"))
   }
 
   private def readBuckets(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexRead.meta(spark, dir).getInt(0)
 
   /** Fold newly ingested documents in (doc-complete batches, new ids
     * only — the shared single-writer contract). */

@@ -69,16 +69,11 @@ object KmvIndex {
     sketchRows(docs, sliceCol, k)
       .repartition(col("slice"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("slice").parquet(s"$dir/sketch")
-    val spark = docs.sparkSession
-    spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row(k)),
-      StructType(Seq(StructField("k", IntegerType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(k).as("k"))
   }
 
   private def readK(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexRead.meta(spark, dir).getInt(0)
 
   /** Fold a newly ingested doc-complete batch in — the batch's own
     * bottom-k rows appended per slice (the merge law makes the reader's

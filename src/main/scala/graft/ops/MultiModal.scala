@@ -206,16 +206,9 @@ object MultiModal {
   private val ImageBandsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id LONG, fp LONG, band INT, bandval LONG, bkt LONG")
 
-  private case class ImageMeta(bandBuckets: Int)
-
-  private val imageMeta = new Dedup.MetaMemo[String, ImageMeta]
-
-  private def readImageMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): ImageMeta =
-    imageMeta.getOrRead(spark, dir, Dedup.metaStamp(spark, dir)) {
-      ImageMeta(spark.read.parquet(s"$dir/meta").first()
-        .getAs[Int]("band_buckets"))
-    }
+  private def imageBandBuckets(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Int =
+    IndexRead.meta(spark, dir).getAs[Int]("band_buckets")
 
   /** The SEVENTH persisted index — dHash bands for incremental
     * perceptual image dedup: `<dir>/bands` = (doc_id, fp, band,
@@ -237,14 +230,11 @@ object MultiModal {
       .withColumn("bkt", pmod(col("bandval"), lit(bandBuckets.toLong)))
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/bands")
-    payloads.sparkSession.range(1)
-      .select(lit(bandBuckets).as("band_buckets"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    imageMeta.invalidate(payloads.sparkSession)(_ == dir)
+    IndexRead.writeMeta(payloads.sparkSession, dir, lit(bandBuckets).as("band_buckets"))
   }
 
   def appendToImageIndex(payloads: DataFrame, dir: String): Unit = {
-    val bandBuckets = readImageMeta(payloads.sparkSession, dir).bandBuckets
+    val bandBuckets = imageBandBuckets(payloads.sparkSession, dir)
     dHashBands(payloads)
       .withColumn("doc_id", col("doc_id").cast("long"))
       .withColumn("bkt", pmod(col("bandval"), lit(bandBuckets.toLong)))
@@ -284,23 +274,20 @@ object MultiModal {
     *
     * Scale shape: the delta's band rows are delta-sized (broadcast by
     * AQE); the index read is partition-PRUNED to the buckets the
-    * delta's bandvals hash into (metadata-sized driver round-trip);
-    * fingerprints ride both sides so hamming verifies inline — zero
-    * post-candidate joins, no index shuffle. */
+    * delta's bandvals hash into ([[IndexRead.touched]], always — no
+    * footprint gate); fingerprints ride both sides so hamming verifies
+    * inline — zero post-candidate joins, no index shuffle. */
   def imageNearDupsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       deltaPayloads: DataFrame, dir: String,
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming < DHashBands,
       s"maxHamming must be < $DHashBands bands, got $maxHamming")
-    val meta = readImageMeta(spark, dir)
+    val bandBuckets = imageBandBuckets(spark, dir)
     val deltaBands = PipelineCaches.track(dHashBands(deltaPayloads))
-    val touched = deltaBands
-      .select(pmod(col("bandval"), lit(meta.bandBuckets.toLong)).as("bkt"))
-      .distinct().collect().map(_.getLong(0))
     val idx = Tombstones.minus(spark, dir,
-        spark.read.schema(ImageBandsSchema)
-          .parquet(DirSwap.resolve(spark, s"$dir/bands"))
-          .filter(col("bkt").isin(touched.toSeq: _*)))
+        IndexRead.touched(spark.read.schema(ImageBandsSchema)
+            .parquet(DirSwap.resolve(spark, s"$dir/bands")),
+          deltaBands.select(pmod(col("bandval"), lit(bandBuckets.toLong))), "bkt"))
       .select(col("band"), col("bandval"),
         col("doc_id").as("doc_a"), col("fp").as("fp_a"))
     idx.join(deltaBands.select(col("band"), col("bandval"),
@@ -514,16 +501,9 @@ object MultiModal {
   private val AudioFpsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id LONG, fp LONG, bkt LONG")
 
-  private case class AudioMeta(fpBuckets: Int)
-
-  private val audioMeta = new Dedup.MetaMemo[String, AudioMeta]
-
-  private def readAudioMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): AudioMeta =
-    audioMeta.getOrRead(spark, dir, Dedup.metaStamp(spark, dir)) {
-      AudioMeta(spark.read.parquet(s"$dir/meta").first()
-        .getAs[Int]("fp_buckets"))
-    }
+  private def audioFpBuckets(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Int =
+    IndexRead.meta(spark, dir).getAs[Int]("fp_buckets")
 
   /** The FIFTEENTH persisted index — chroma fingerprints for
     * incremental audio dedup: `<dir>/fps` = (doc_id, fp) partitioned
@@ -543,14 +523,11 @@ object MultiModal {
       .withColumn("bkt", pmod(col("fp"), lit(fpBuckets.toLong)))
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/fps")
-    docs.sparkSession.range(1)
-      .select(lit(fpBuckets).as("fp_buckets"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    audioMeta.invalidate(docs.sparkSession)(_ == dir)
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(fpBuckets).as("fp_buckets"))
   }
 
   def appendToAudioIndex(docs: DataFrame, dir: String): Unit = {
-    val fpBuckets = readAudioMeta(docs.sparkSession, dir).fpBuckets
+    val fpBuckets = audioFpBuckets(docs.sparkSession, dir)
     audioFps(docs)
       .withColumn("bkt", pmod(col("fp"), lit(fpBuckets.toLong)))
       .repartition(col("bkt"))
@@ -594,23 +571,20 @@ object MultiModal {
     *
     * Scale shape: the delta's fingerprints are delta-sized; the index
     * read is partition-PRUNED to the buckets the delta's fps hash into
-    * (metadata-sized driver round-trip); one fp-keyed join, pair counts
-    * ≥ minShared — no index-wide shuffle ever. */
+    * ([[IndexRead.touched]], always — no footprint gate); one fp-keyed
+    * join, pair counts ≥ minShared — no index-wide shuffle ever. */
   def audioNearDupsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       deltaDocs: DataFrame, dir: String, minShared: Int = 3,
       dfCap: Int = 50): DataFrame = {
     require(minShared > 0 && dfCap >= 2)
-    val meta = readAudioMeta(spark, dir)
+    val fpBuckets = audioFpBuckets(spark, dir)
     val deltaFps = PipelineCaches.track(audioFps(deltaDocs))
-    val touched = deltaFps
-      .select(pmod(col("fp"), lit(meta.fpBuckets.toLong)).as("bkt"))
-      .distinct().collect().map(_.getLong(0))
     // tombstone anti-join BEFORE the df count: a forgotten doc's
     // fingerprints must neither pair nor inflate the df cap
     val idx = PipelineCaches.track(Tombstones.minus(spark, dir,
-      spark.read.schema(AudioFpsSchema)
-        .parquet(DirSwap.resolve(spark, s"$dir/fps"))
-        .filter(col("bkt").isin(touched.toSeq: _*)))
+      IndexRead.touched(spark.read.schema(AudioFpsSchema)
+          .parquet(DirSwap.resolve(spark, s"$dir/fps")),
+        deltaFps.select(pmod(col("fp"), lit(fpBuckets.toLong))), "bkt"))
       .select(col("doc_id"), col("fp")))
     // exact df per candidate fp from the pruned buckets (see Scaladoc)
     val df = idx.unionAll(deltaFps).groupBy(col("fp"))

@@ -120,15 +120,11 @@ object PhraseIndex {
     DirSwap.reset(docs.sparkSession, s"$dir/postings")
     partials(docs, buckets).repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/postings")
-    docs.sparkSession.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row(buckets)),
-      StructType(Seq(StructField("buckets", IntegerType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(buckets).as("buckets"))
   }
 
   private def readBuckets(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexRead.meta(spark, dir).getInt(0)
 
   /** Fold newly ingested documents in — additive file appends, one
     * file per touched bucket per batch. Contract: new doc_ids only

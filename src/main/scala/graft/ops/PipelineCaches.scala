@@ -3,6 +3,7 @@ package graft.ops
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions
 
 /** Session-scoped registry for the cache blocks the dedup/LSH pipelines
   * create.
@@ -112,10 +113,14 @@ object PipelineCaches {
       track(df.repartition(1))
     else track(df)
 
-  /** Cache `df` and register it for the session-wide [[release]]. */
+  /** Cache `df` and register it for the session-wide [[release]]. A
+    * plan the CacheManager already holds is not cached again (Spark
+    * would only log a warning) but is still registered. */
   private[ops] def track(df: DataFrame): DataFrame = {
     purgeStopped()
-    df.cache()
+    if (df.sparkSession.sharedState.cacheManager
+        .lookupCachedData(ClassicConversions.castToImpl(df)).isEmpty)
+      df.cache()
     live.computeIfAbsent(df.sparkSession,
       _ => new ConcurrentLinkedQueue[DataFrame]).add(df)
     df

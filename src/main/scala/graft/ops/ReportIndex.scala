@@ -89,16 +89,11 @@ object ReportIndex {
     partials(docs, hashBuckets)
       .repartition(col("bkt"))
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/data")
-    val spark = docs.sparkSession
-    spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row(hashBuckets)),
-      StructType(Seq(StructField("hash_buckets", IntegerType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(hashBuckets).as("hash_buckets"))
   }
 
   private def readBuckets(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexRead.meta(spark, dir).getInt(0)
 
   /** Fold newly ingested documents in — pure additive file appends (the
     * reader re-aggregates), one file per touched bucket per batch.

@@ -502,7 +502,7 @@ object SimSearch {
     * actually runs: the corpus's cell assignment is the IVF index
     * written once ([[writeIvfIndexWith]], cell-partitioned), and each
     * eval-suite pass reads ONLY the probed cells' partitions
-    * (PartitionFilters — DeconEmbedSpec pins the pruned scan), never
+    * ([[IndexRead.touched]]; DeconEmbedSpec pins the pruned scan), never
     * the whole corpus. Cells, probes, and the argmax tail are
     * bit-identical to [[deconEmbedIvfQ]] (same deterministic centroid
     * sample, same tie-breaks), so the declared query shares the
@@ -513,7 +513,7 @@ object SimSearch {
   def deconEmbedFromIndexQ(spark: org.apache.spark.sql.SparkSession,
       idxDir: String, embeddings: DataFrame, evalMod: Int = 50,
       threshold: Double = 0.3, nProbeCells: Int = 4): DataFrame = {
-    val centroids = spark.read.parquet(s"$idxDir/centroids")
+    val centroids = readCentroids(spark, idxDir)
     // cached: the probe table feeds an EAGER driver collect (the
     // probed-cell id list below, evaluated during DataFrame
     // construction) AND the broadcast join — without the cache the
@@ -529,14 +529,31 @@ object SimSearch {
             .orderBy(col("cell_sim").desc, col("cell").asc)))
         .filter(col("cr") <= nProbeCells)
         .select(col("eval_id"), col("ev"), col("en"), col("cell")))
-    // ≤ nCells distinct probed cells — the metadata-sized collect the
-    // ivfTopKFromIndex partition-pruned read already uses
-    val cells = probeCells.select("cell").distinct().collect().map(_.getLong(0))
-    val idx = Tombstones.minus(spark, idxDir,
-      spark.read.parquet(DirSwap.resolve(spark, s"$idxDir/cells"))
-        .filter(col("cell").isin(cells: _*)), "vec_id")
-    deconTail(idx.join(broadcast(probeCells), Seq("cell")), threshold)
+    deconTail(probedCells(spark, idxDir, probeCells)
+      .join(broadcast(probeCells), Seq("cell")), threshold)
   }
+
+  /** On-disk schemas of the IVF index tables — declared, so a probe
+    * runs no footer-inference job (vec_id and cell are the corpus's
+    * BIGINT vec_id; `cell` is the partition column). */
+  private val CentroidsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "cell LONG, cv ARRAY<DOUBLE>, cn DOUBLE")
+  private val CellsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "vec_id LONG, v ARRAY<DOUBLE>, nrm DOUBLE, cell LONG")
+
+  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    spark.read.schema(CentroidsSchema).parquet(s"$dir/centroids")
+
+  /** The index rows of the cells `probeCells` names (≤ nCells, the
+    * [[IndexRead.touched]] prune — it always prunes), forgotten vectors
+    * anti-joined out. */
+  private def probedCells(spark: org.apache.spark.sql.SparkSession,
+      dir: String, probeCells: DataFrame): DataFrame =
+    Tombstones.minus(spark, dir,
+      IndexRead.touched(spark.read.schema(CellsSchema)
+          .parquet(DirSwap.resolve(spark, s"$dir/cells")),
+        probeCells.select("cell"), "cell"), "vec_id")
 
   /** [[deconEmbedFromIndexQ]] with the per-(session, sf-dir) memoized
     * index build — the declared-query entry point. The index is the
@@ -873,7 +890,7 @@ object SimSearch {
     * invalidated — retraining is the offline rebuild path. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       embeddings: DataFrame, dir: String): Unit = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = readCentroids(spark, dir)
     assignCells(normed(embeddings), centroids)
       .write.mode("append").partitionBy("cell")
       .parquet(DirSwap.resolve(spark, s"$dir/cells"))
@@ -888,7 +905,8 @@ object SimSearch {
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     DirSwap(spark, s"$dir/cells") { out =>
       Tombstones.minus(spark, dir,
-        spark.read.parquet(DirSwap.resolve(spark, s"$dir/cells")), "vec_id")
+        spark.read.schema(CellsSchema)
+          .parquet(DirSwap.resolve(spark, s"$dir/cells")), "vec_id")
         .repartition(col("cell"))
         .write.partitionBy("cell").parquet(out)
     }
@@ -952,16 +970,15 @@ object SimSearch {
   }
 
   /** Query a persisted IVF index: rank cells per probe against the
-    * stored centroids, then scan ONLY the probed cells' partitions.
-    * The probed-cell set is metadata-sized (|probes| × nProbeCells
-    * ids), so collecting it to drive static partition pruning is a
-    * bounded driver round-trip, not a data collect — the alternative
+    * stored centroids, then scan ONLY the probed cells' partitions
+    * ([[IndexRead.touched]]: the probed-cell set is |probes| ×
+    * nProbeCells ids, a bounded driver round-trip) — the alternative
     * (joining on cell and relying on dynamic partition pruning) keeps
     * the same I/O but hides the pruning decision in runtime planning.
     * `probes`: (probe_id, embedding) frame. */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       probes: DataFrame, k: Int = 5, nProbeCells: Int = 2): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = readCentroids(spark, dir)
     val p = normed(probes.select(col("probe_id").as("vec_id"), col("embedding")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
     val probeCells = p.crossJoin(broadcast(centroids))
@@ -971,11 +988,7 @@ object SimSearch {
         Window.partitionBy(col("probe_id")).orderBy(col("cell_sim").desc, col("cell").asc)))
       .filter(col("cr") <= nProbeCells)
       .select(col("probe_id"), col("pv"), col("pn"), col("cell"))
-    val cells = probeCells.select("cell").distinct().collect().map(_.getLong(0))
-    val idx = Tombstones.minus(spark, dir,
-      spark.read.parquet(DirSwap.resolve(spark, s"$dir/cells"))
-        .filter(col("cell").isin(cells: _*)), "vec_id")
-    val sims = idx.join(broadcast(probeCells), Seq("cell"))
+    val sims = probedCells(spark, dir, probeCells).join(broadcast(probeCells), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         (ndot(col("v"), col("pv")) / (col("nrm") * col("pn"))).as("cos_sim"))

@@ -101,16 +101,11 @@ object TextIndex {
       .write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy("bkt").parquet(s"$dir/postings")
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     done()
-    val spark = docs.sparkSession
-    spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row(buckets)),
-      StructType(Seq(StructField("buckets", IntegerType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexRead.writeMeta(docs.sparkSession, dir, lit(buckets).as("buckets"))
   }
 
   private def readBuckets(spark: SparkSession, dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getInt(0)
+    IndexRead.meta(spark, dir).getInt(0)
 
   // by-name pass-through: Tombstones.minus resolves the deletes table
   // BEFORE the rows argument's own DirSwap.resolve runs (round-17

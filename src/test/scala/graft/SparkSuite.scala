@@ -4,15 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs: one local session, UTC, small
-  * shuffle parallelism (test data is tiny). */
+  * shuffle parallelism (test data is tiny), tuned by [[Engine.tune]] so
+  * every spec runs under the engine's own confs whichever spec created
+  * the session. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Engine.tune(SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .getOrCreate())
 
   val sf = "/root/testdata/sf0.001"
 

@@ -106,6 +106,25 @@ class FuzzyMatchSpec extends SparkSuite {
     PipelineCaches.release(spark)
   }
 
+  test("index-backed fuzzy lookup never returns a forgotten doc") {
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "a completely separate sentence about parquet files and spark jobs"),
+      (3L, "yet another document describing incremental index maintenance loops"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("fuzzy_forget").toString
+    Dedup.writeNearDupIndex(corpus, dir)
+    Dedup.forgetFromNearDupIndex(spark, dir, Seq(2L).toDF("doc_id"))
+    // verbatim copies of a forgotten and of a live doc; the caller's
+    // text table still holds the forgotten doc's text
+    val probes = corpus.filter($"doc_id" =!= 1L)
+      .select(($"doc_id" + 100L).as("doc_id"), $"text")
+    val got = Dedup.fuzzyMatchAgainstIndex(spark, probes, dir, corpus)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    PipelineCaches.release(spark)
+    assert(got == Set(103L -> 3L), s"forgotten doc 2 must not match, got $got")
+  }
+
   test("deployment: doc_id-bucketed corpus text feeds the verify join with no corpus-side exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec

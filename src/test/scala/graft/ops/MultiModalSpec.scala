@@ -109,5 +109,16 @@ class MultiModalSpec extends SparkSuite {
       assert(pairs.contains((i, i + 100000L)),
         s"base $i must pair with its corrupted re-encode variant")
     }
+    // index lookup: reads only the delta's buckets (PartitionFilters pin)
+    val dir = java.nio.file.Files.createTempDirectory("audio_prune").toString
+    MultiModal.writeAudioIndex(docs, dir)
+    val delta = Seq((500L, tone(200, 10).updated(80, ' '))).toDF("doc_id", "text")
+    val found = MultiModal.audioNearDupsAgainstIndex(spark, delta, dir)
+    val scanLine = found.queryExecution.executedPlan.toString.linesIterator
+      .find(l => l.contains("FileScan") && l.contains("fps")).getOrElse("")
+    assert(scanLine.contains("PartitionFilters: [bkt"),
+      s"audio index scan must carry a bucket partition filter:\n$scanLine")
+    assert(!found.isEmpty, "the corrupted copy must pair with its indexed base")
+    PipelineCaches.release(spark)
   }
 }
