@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Dispatch}
 
 /** Per-probe stage-metric tally: total shuffle write bytes, the largest
   * single-stage shuffle write (the "peak shuffle" a 100 TB exchange
@@ -92,6 +92,14 @@ object ScaleSmoke {
         lit("en").as("lang"))
     }.reduce(_ unionAll _)
 
+  /** `body` with every [[Dispatch]] gate of `spark` forced to its large
+    * form (the 100 TB path a probe measures); the conf is restored. */
+  private def forcedLarge[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.get(Dispatch.ForceKey, "auto")
+    spark.conf.set(Dispatch.ForceKey, "large")
+    try body finally spark.conf.set(Dispatch.ForceKey, prev)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ks = args.drop(1).headOption.getOrElse("1,4,16").split(",").map(_.toInt)
@@ -140,7 +148,7 @@ object ScaleSmoke {
       val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        run("near_dup_smj", Dedup.nearDupPairs(docs, verifyMode = Dedup.VerifyBucketed))
+        run("near_dup_smj", forcedLarge(spark)(Dedup.nearDupPairs(docs)))
         // fuzzy's corpus-text join must degrade to sort-merge when the
         // corpus outgrows broadcasts (probe sides stay broadcast by
         // contract — they are delta-sized)
@@ -150,14 +158,16 @@ object ScaleSmoke {
       graft.ops.PipelineCaches.release(spark)
       spark.sharedState.cacheManager.clearCache()
       // pairs → clusters, BOTH at-scale stages forced: the map-side
-      // local contraction always runs, and maxEdgesBroadcast = -1
-      // disables the driver union-find so the iterative star loop is
-      // what's measured — its round count must stay flat as the edge
-      // list grows (amplified replicas never cross-match, so components
+      // local contraction always runs, and the forced-large gate skips
+      // the driver union-find so the iterative star loop is what's
+      // measured — its round count must stay flat as the edge list
+      // grows (amplified replicas never cross-match, so components
       // scale in count, not diameter). The gated path is a fixture
       // optimization; this probe's job is the 100 TB loop.
-      run("components", graft.ops.Components.connectedComponents(
-        Dedup.nearDupPairs(docs), maxEdgesBroadcast = -1L))
+      run("components", {
+        val pairs = Dedup.nearDupPairs(docs)
+        forcedLarge(spark)(graft.ops.Components.connectedComponents(pairs))
+      })
       graft.ops.PipelineCaches.release(spark)
       spark.sharedState.cacheManager.clearCache()
       // dsir: two full token-stream passes against a 256-row broadcast

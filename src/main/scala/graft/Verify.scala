@@ -5,7 +5,11 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Exits non-zero
-  * naming every query that threw. */
+  * naming every query that threw. After each query it prints one
+  * `[dispatch] <query> <gate> estimate=… threshold=… branch=…` line per
+  * size-gate decision ([[graft.ops.Dispatch]]); run with
+  * `-Dspark.graft.dispatch.force=large` it checks every gate's 100 TB
+  * form against the same oracle. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
@@ -47,7 +51,8 @@ object Verify {
   /** Writes each query's result to `outDir/<name>` as parquet and returns
     * the names of the queries that threw, sorted. A query's old dump is
     * deleted before it runs, so one that throws leaves nothing behind for
-    * the oracle compare to pass on. */
+    * the oracle compare to pass on. Prints the query's `[dispatch]`
+    * decisions after it. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
     new File(outDir).mkdirs()
@@ -61,6 +66,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(name)
         }
+      graft.ops.Dispatch.drain(spark).foreach(d => println(s"[dispatch] $name $d"))
       // the dedup/similarity pipelines cache intermediates scoped to one
       // invocation — release them via the documented lifetime API, with
       // the clearCache sweep guarding anything cached outside it

@@ -47,13 +47,17 @@ object Components {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.headOption
 
+  /** The smallest contracted edge count [[connectedComponents]] runs
+    * the star loop for. */
+  private val StarLoopEdges: Long = (1L << 20) + 1
+
   /** (doc_id, cluster) for every node of `pairs`, where cluster = the
     * smallest doc id in the node's connected component. Self-loops are
     * dropped; `maxRounds` is a defensive bound (the algorithm needs
     * O(log²) — a non-converging input indicates corrupt edges) and
     * exceeding it throws rather than returning a wrong answer.
     *
-    * Size gate (the [[Dedup]] `applySpanFilter` pattern): the star loop
+    * Size gate (a [[Dispatch]] gate at [[StarLoopEdges]]): the star loop
     * pays ~log² rounds of fixed scheduling cost regardless of input
     * size — at fixture scale that floor dwarfs the work. The gate runs
     * over the locally CONTRACTED edges (see the contraction note in the
@@ -70,8 +74,7 @@ object Components {
     * never runs twice either way. Gated ≡ star is pinned in
     * ComponentsSpec. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
-      bCol: String = "doc_b", maxRounds: Int = 30,
-      maxEdgesBroadcast: Long = 1L << 20): DataFrame = {
+      bCol: String = "doc_b", maxRounds: Int = 30): DataFrame = {
     // canonical directed form: big → small. NOT deduplicated: both star
     // steps tolerate duplicate edges (min-aggregates are idempotent and
     // each round's output is distinct'd), so a dup-laden input costs at
@@ -176,8 +179,7 @@ object Components {
     // straight from the cache. PipelineCaches releases the blocks with
     // the pipeline's documented lifetime.
     val tracked = PipelineCaches.track(contracted)
-    val nContracted = tracked.count()
-    if (maxEdgesBroadcast >= 0 && nContracted <= maxEdgesBroadcast) {
+    if (!Dispatch.pick(session, "connectedComponents", StarLoopEdges)(tracked.count())) {
       return labelsByUnionFind(pairs.sparkSession,
         tracked.collect().map(r => (r.getLong(0), r.getLong(1))))
     }

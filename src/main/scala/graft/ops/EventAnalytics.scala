@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -225,7 +225,7 @@ object EventAnalytics {
     * node asc).
     *
     * Size dispatch (the [[Components]] local-contraction discipline):
-    * when the AGGREGATED edge list is ≤ `maxEdgesLocal` rows it
+    * when the AGGREGATED edge list is under [[DistributedEdges]] rows it
     * collects and the iterations run driver-side with the identical
     * integer arithmetic — 5 chained shuffle rounds over a
     * hundred-node graph paid ~3 s of pure exchange machinery at the
@@ -251,31 +251,31 @@ object EventAnalytics {
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
   }
 
-  def pageRankQ(events: DataFrame, iters: Int = 5, k: Int = 20,
-      maxEdgesLocal: Int = 1 << 20): DataFrame =
-    rankEdges(PipelineCaches.track(transitionEdges(events)),
-      iters, k, maxEdgesLocal)
+  def pageRankQ(events: DataFrame, iters: Int = 5, k: Int = 20): DataFrame =
+    rankEdges(PipelineCaches.track(transitionEdges(events)), iters, k)
+
+  /** The smallest aggregated edge count the graph loops run distributed. */
+  private val DistributedEdges: Int = (1 << 20) + 1
 
   /** Size-dispatch gate shared by the graph loops ([[rankEdges]],
-    * [[hitsEdges]], [[propagateLabels]]): a count over a
-    * limit(max + 1) subplan — ONE job shipping a single long — decides
-    * the branch, and only a local-sized graph pays the second job that
-    * ships its edge rows. The distributed branch never materializes an
-    * edge row on the driver (the former limit-collect gate held up to
-    * max + 1 full rows before discarding them — round-13 judge note);
-    * the local branch's collect is bounded by the count it just
-    * passed. */
-  private def localEdges(edges: DataFrame,
-      maxEdgesLocal: Int): Option[Array[(Long, Long, Long)]] =
-    if (edges.limit(maxEdgesLocal + 1).count() > maxEdgesLocal) None
+    * [[hitsEdges]], [[propagateLabels]]), a [[Dispatch]] gate named
+    * `name`: its estimate is a count over a limit([[DistributedEdges]])
+    * subplan — ONE job shipping a single long — and only a local-sized
+    * graph pays the second job that ships its edge rows. The
+    * distributed branch never materializes an edge row on the driver
+    * (the former limit-collect gate held up to the limit in full rows
+    * before discarding them — round-13 judge note); the local branch's
+    * collect is bounded by the count it just passed. */
+  private def localEdges(edges: DataFrame, name: String): Option[Array[(Long, Long, Long)]] =
+    if (Dispatch.pick(edges.sparkSession, name, DistributedEdges)(
+        edges.limit(DistributedEdges).count())) None
     else Some(edges.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
 
   /** The damped-rank loop over an aggregated (src, dst, w) edge frame
     * — see [[pageRankQ]] for semantics and the size dispatch. */
-  def rankEdges(edges: DataFrame, iters: Int = 5, k: Int = 20,
-      maxEdgesLocal: Int = 1 << 20): DataFrame = {
-    localEdges(edges, maxEdgesLocal) match { case Some(es) =>
+  def rankEdges(edges: DataFrame, iters: Int = 5, k: Int = 20): DataFrame = {
+    localEdges(edges, "rankEdges") match { case Some(es) =>
       // LOCAL CONTRACTION: the contracted graph is metadata-sized —
       // run the identical integer loop on the driver, zero iteration
       // shuffles (the Components union-find gate, same adjudication)
@@ -469,19 +469,16 @@ object EventAnalytics {
     * both scores per row.
     *
     * Scale shape: per round two rank⋈edge joins + two keyed sums
-    * (rank-table-sized) and two ONE-row max scalars broadcast back
-    * (crossJoin of a 1-row frame — the q_bm25 stats-scalar idiom).
+    * (rank-table-sized) and two ONE-row max scalars read back as scalar
+    * subqueries (no nested-loop join against the node table).
     * Same size dispatch as [[rankEdges]]; branch parity spec-pinned. */
-  def hitsQ(events: DataFrame, iters: Int = 3, k: Int = 20,
-      maxEdgesLocal: Int = 1 << 20): DataFrame =
-    hitsEdges(PipelineCaches.track(transitionEdges(events)),
-      iters, k, maxEdgesLocal)
+  def hitsQ(events: DataFrame, iters: Int = 3, k: Int = 20): DataFrame =
+    hitsEdges(PipelineCaches.track(transitionEdges(events)), iters, k)
 
-  def hitsEdges(edges: DataFrame, iters: Int = 3, k: Int = 20,
-      maxEdgesLocal: Int = 1 << 20): DataFrame = {
+  def hitsEdges(edges: DataFrame, iters: Int = 3, k: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    localEdges(edges, maxEdgesLocal) match { case Some(es) =>
+    localEdges(edges, "hitsEdges") match { case Some(es) =>
       // zero transition edges: an empty frame, not a max() over an
       // empty renormalization map (propagateLabels' degenerate-input
       // convention)
@@ -517,26 +514,26 @@ object EventAnalytics {
           .join(hdf.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"), (col("h") * col("w")).as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("ar"))
-        val da = araw.agg(max(col("ar")).as("m"))
-          .select(greatest(lit(1L), expr("m div 1000000000")).as("da"))
         adf = nodes.join(araw, Seq("node"), "left")
-          .crossJoin(broadcast(da))
-          .select(col("node"), expr("coalesce(ar, 0L) div da").as("a"))
+          .select(col("node"), nanoDiv(coalesce(col("ar"), lit(0L)), araw, "ar").as("a"))
         val hraw = edges
           .join(adf.withColumnRenamed("node", "dst"), "dst")
           .select(col("src").as("node"), (col("a") * col("w")).as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("hr"))
-        val dh = hraw.agg(max(col("hr")).as("m"))
-          .select(greatest(lit(1L), expr("m div 1000000000")).as("dh"))
         hdf = nodes.join(hraw, Seq("node"), "left")
-          .crossJoin(broadcast(dh))
-          .select(col("node"), expr("coalesce(hr, 0L) div dh").as("h"))
+          .select(col("node"), nanoDiv(coalesce(col("hr"), lit(0L)), hraw, "hr").as("h"))
       }
       adf.join(hdf, "node")
         .orderBy(col("a").desc, col("node").asc).limit(k)
         .select(col("node"), col("a").as("auth_nano"), col("h").as("hub_nano"))
     }
   }
+
+  /** `x div max(1, m div 10⁹)` with m the max of `raw.c` — the HITS
+    * max-norm on the nano grid; m is a scalar subquery (one row). */
+  private def nanoDiv(x: Column, raw: DataFrame, c: String): Column =
+    call_function("div", x, greatest(lit(1L),
+      call_function("div", raw.agg(max(col(c))).scalar(), lit(1000000000L))))
 
   /** Undirected view of a (src, dst, w) edge aggregate: both
     * directions unioned, weights re-summed — (a,b) and (b,a) directed
@@ -579,16 +576,13 @@ object EventAnalytics {
     * and loops driver-side with identical arithmetic; past the
     * count-based gate the distributed loop runs without shipping a
     * single edge row, branch parity pinned in EventAnalyticsSpec. */
-  def labelPropQ(events: DataFrame, iters: Int = 2,
-      maxEdgesLocal: Int = 1 << 20): DataFrame =
+  def labelPropQ(events: DataFrame, iters: Int = 2): DataFrame =
     propagateLabels(
-      PipelineCaches.track(symmetrize(transitionEdges(events))),
-      iters, maxEdgesLocal)
+      PipelineCaches.track(symmetrize(transitionEdges(events))), iters)
 
-  def propagateLabels(edges: DataFrame, iters: Int = 2,
-      maxEdgesLocal: Int = 1 << 20): DataFrame = {
+  def propagateLabels(edges: DataFrame, iters: Int = 2): DataFrame = {
     val spark = edges.sparkSession
-    localEdges(edges, maxEdgesLocal) match { case Some(es) =>
+    localEdges(edges, "propagateLabels") match { case Some(es) =>
       val nodeSet = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
       // symmetric edge list: every node occurs as dst, so the incident
       // map is total over nodeSet

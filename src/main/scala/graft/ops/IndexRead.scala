@@ -111,17 +111,20 @@ private[ops] object IndexRead {
       .asInstanceOf[T]
 
   /** True when the index table at `table` (a [[DirSwap]] live path)
-    * occupies less than `gateBytes` on disk — a driver filesystem stat,
-    * no Spark job. Lookups read the whole table below the gate, because
-    * the job [[touched]] runs costs more than the partitions it skips;
-    * above it, pruning is what keeps a micro-batch lookup independent of
-    * corpus size. `gateBytes <= 0` always prunes, without the stat. */
-  def small(spark: SparkSession, table: String, gateBytes: Long): Boolean =
-    gateBytes > 0 && {
+    * occupies less than [[PruneBytes]] on disk — a [[Dispatch]] gate on a
+    * driver filesystem stat, no Spark job. Lookups read the whole table
+    * below the gate, because the job [[touched]] runs costs more than
+    * the partitions it skips; above it, pruning is what keeps a
+    * micro-batch lookup independent of corpus size. */
+  def small(spark: SparkSession, table: String): Boolean =
+    !Dispatch.pick(spark, s"IndexRead.small(${table.split('/').last})", PruneBytes) {
       val p = new org.apache.hadoop.fs.Path(DirSwap.resolve(spark, table))
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength < gateBytes
+        .getContentSummary(p).getLength
     }
+
+  /** The smallest index footprint (bytes) whose lookups prune. */
+  val PruneBytes: Long = 64L << 20
 
   /** `rows` restricted to the `partCol` partitions named by `keys` (one
     * LONG column): one collect of the distinct key values, then a static

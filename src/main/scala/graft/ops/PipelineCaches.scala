@@ -88,8 +88,9 @@ object PipelineCaches {
     df
   }
 
-  /** Planner-estimated size gate for [[trackCompact]] — deliberately an
-    * order of magnitude under Dedup.VerifyAutoBytes / Scoring.RankSmallBytes:
+  /** The smallest planner estimate (bytes) [[trackCompact]] leaves
+    * uncompacted — deliberately an order of magnitude under
+    * Dedup.VerifyLargeBytes / Scoring.RankLargeBytes:
     * compaction serializes every consumer of the cached frame onto one
     * task, which is only safe for metadata-sized frames whose per-row
     * consumer work is trivial (the q_maxsim one-partition hazard class
@@ -97,9 +98,10 @@ object PipelineCaches {
   private[ops] val CompactBytes: Long = 8L << 20
 
   /** [[track]], but when the planner estimates the frame under
-    * `smallBytes` it is first collapsed to ONE partition (a round-robin
-    * exchange over metadata-sized rows), so consumers read a 1-partition
-    * cache instead of spawning a full-width task wave per job — the
+    * [[CompactBytes]] (a [[Dispatch]] gate) it is first collapsed to ONE
+    * partition (a round-robin exchange over metadata-sized rows), so
+    * consumers read a 1-partition cache instead of spawning a
+    * full-width task wave per job — the
     * per-site, size-dispatched form of the cached-plan coalescing the
     * r19 ccp experiment measured (global conf rejected: mixed sign).
     * Above the gate this IS [[track]]: at production scale the estimate
@@ -107,11 +109,10 @@ object PipelineCaches {
     * so the compaction can never serialize a corpus-sized frame. Only
     * for frames whose consumers are order-insensitive (aggregates,
     * joins) — the exchange reorders rows. */
-  private[ops] def trackCompact(df: DataFrame,
-      smallBytes: Long = CompactBytes): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < smallBytes)
-      track(df.repartition(1))
-    else track(df)
+  private[ops] def trackCompact(df: DataFrame): DataFrame =
+    if (Dispatch.pick(df.sparkSession, "trackCompact", CompactBytes)(
+        df.queryExecution.optimizedPlan.stats.sizeInBytes)) track(df)
+    else track(df.repartition(1))
 
   /** Cache `df` and register it for the session-wide [[release]]. A
     * plan the CacheManager already holds is not cached again (Spark

@@ -911,6 +911,10 @@ object Relational {
       .select(col(groupCol) +: names.map(col): _*)
   }
 
+  /** The smallest planner estimate (bytes) [[exactPercentiles]] runs in
+    * its selection form. */
+  private[ops] val SelectFormBytes: Long = 2L << 20
+
   /** Exact percentiles by DISTRIBUTED SELECTION (histogram-select) — the
     * form that never exchanges the data: instead of range-partitioning
     * all 2·|rows| (group, ci, v) tuples to assemble global ranks (see
@@ -955,14 +959,15 @@ object Relational {
     * case in one range partition). Above `maxStatsBroadcast` histogram
     * rows this dispatches to the sort form, whose shuffle handles
     * unbounded cardinality — the same size-gate-with-fallback pattern
-    * as Dedup.applySpanFilter. Below `smallInputBytes`
-    * (planner-estimated, zero extra jobs) the second scan's fixed job
-    * cost stops paying and small inputs ride the sort form. */
+    * as Dedup.applySpanFilter. Below [[SelectFormBytes]]
+    * (planner-estimated, zero extra jobs; a [[Dispatch]] gate) the
+    * second scan's fixed job cost stops paying and small inputs ride
+    * the sort form. */
   private[graft] def exactPercentiles(df: DataFrame, groupCol: String,
       specs: Seq[(String, Seq[(Double, String)])],
-      radixBits: Int = 16, maxStatsBroadcast: Long = 200000,
-      smallInputBytes: Long = 2L << 20): DataFrame = {
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < smallInputBytes)
+      radixBits: Int = 16, maxStatsBroadcast: Long = 200000): DataFrame = {
+    if (!Dispatch.pick(df.sparkSession, "exactPercentiles", SelectFormBytes)(
+        df.queryExecution.optimizedPlan.stats.sizeInBytes))
       return exactPercentilesBySort(df, groupCol, specs)
     selectFormPicks(df, groupCol, specs, radixBits, maxStatsBroadcast) match {
       case None => exactPercentilesBySort(df, groupCol, specs)

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object Scoring {
 
-  /** Planner-estimated input gate for the exact-rank tails (r19,
-    * the [[Relational.exactPercentiles]] / Dedup.VerifyAutoBytes
-    * dispatch convention): below the gate the distinct-score table is
+  /** Planner-estimated input gate for the exact-rank tails (r19, a
+    * [[Dispatch]] gate): below the gate the distinct-score table is
     * fixture-sized and ONE global ordered window is the cheapest exact
     * form (fewest jobs and exchanges — the two-level form measured
     * 1.8-2.5× slower at sf0.1 where its offset jobs dominate); above
@@ -29,11 +28,12 @@ object Scoring {
     * from a bounded ≤1024-row table, ordered windows within bins —
     * identical values (branch parity spec-pinned), corpus-parallel,
     * no single-partition WindowExec over a growing frame. */
-  private[ops] val RankSmallBytes: Long = 64L << 20
+  private[ops] def rankTwoLevel(docs: DataFrame): Boolean =
+    Dispatch.pick(docs.sparkSession, "rankTwoLevel", RankLargeBytes)(
+      docs.queryExecution.optimizedPlan.stats.sizeInBytes)
 
-  private[ops] def rankTwoLevel(docs: DataFrame,
-      smallBytes: Long = RankSmallBytes): Boolean =
-    docs.queryExecution.optimizedPlan.stats.sizeInBytes >= smallBytes
+  /** The smallest planner estimate (bytes) that ranks in two levels. */
+  private[ops] val RankLargeBytes: Long = 64L << 20
 
   private def toks(docs: DataFrame): Column =
     split(lower(trim(col("text"))), "\\s+")

@@ -164,21 +164,25 @@ private[graft] object ForgetLedger {
 
   def path(dataDir: String): String = s"$dataDir/_deletes"
 
-  private def fsPath(spark: SparkSession, dataDir: String) = {
-    val p = new org.apache.hadoop.fs.Path(path(dataDir))
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  /** The ledger's rows under `schema`, or None when it holds no part
+    * file (one glob, no job). Read by its part files, not by the dir:
+    * the `_` prefix that hides the ledger from the data's own listing
+    * also makes Spark warn that a read of the dir ignored it. */
+  private def rows(spark: SparkSession, dataDir: String,
+      schema: StructType): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"${path(dataDir)}/[^_.]*")
+    val parts = p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p)
+    Option.when(parts.nonEmpty)(
+      spark.read.schema(schema).parquet(parts.map(_.getPath.toString).toIndexedSeq: _*))
   }
 
   /** The victim ids NOT already registered — distinct, long. */
   def fresh(spark: SparkSession, dataDir: String,
       victims: DataFrame): DataFrame = {
     val v = victims.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val (p, fs) = fsPath(spark, dataDir)
-    if (!fs.exists(p)) v
-    else v.join(broadcast(
-      spark.read.schema(StructType(Seq(StructField("doc_id", LongType))))
-        .parquet(p.toString).filter(col("doc_id").isNotNull)),
-      Seq("doc_id"), "left_anti")
+    rows(spark, dataDir, StructType(Seq(StructField("doc_id", LongType))))
+      .fold(v)(r => v.join(broadcast(r.filter(col("doc_id").isNotNull)),
+        Seq("doc_id"), "left_anti"))
   }
 
   /** ONE-append commit: the fresh registry ids plus their positive
@@ -195,15 +199,10 @@ private[graft] object ForgetLedger {
 
   /** The ledger's contribution rows under `corrSchema` (correction
     * columns only, still POSITIVE — callers negate), or None when no
-    * ledger exists (the steady state: one FS check, no job). */
+    * ledger exists (the steady state: one FS glob, no job). */
   def contributions(spark: SparkSession, dataDir: String,
-      corrSchema: StructType): Option[DataFrame] = {
-    val (p, fs) = fsPath(spark, dataDir)
-    if (!fs.exists(p)) None
-    else Some(spark.read
-      .schema(StructType(StructField("doc_id", LongType) +: corrSchema.fields))
-      .parquet(p.toString)
-      .filter(col("doc_id").isNull)
-      .select(corrSchema.fieldNames.toSeq.map(col): _*))
-  }
+      corrSchema: StructType): Option[DataFrame] =
+    rows(spark, dataDir, StructType(StructField("doc_id", LongType) +: corrSchema.fields))
+      .map(_.filter(col("doc_id").isNull)
+        .select(corrSchema.fieldNames.toSeq.map(col): _*))
 }

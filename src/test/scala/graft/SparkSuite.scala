@@ -18,6 +18,18 @@ trait SparkSuite extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
+  /** `body` on an isolated, tuned `spark.newSession()` whose size gates
+    * ([[graft.ops.Dispatch]]) run in mode `force` (`small`, `large`, or
+    * `auto` for a decision record of its own) — never on the shared
+    * session, whose conf other suites read. The session's pipeline
+    * caches are released after `body`, so `body` must finish its
+    * actions (return rows, not a DataFrame). */
+  def forced[T](force: String)(body: SparkSession => T): T = {
+    val s = Engine.tune(spark.newSession())
+    s.conf.set(graft.ops.Dispatch.ForceKey, force)
+    try body(s) finally graft.ops.PipelineCaches.release(s)
+  }
+
   /** The CURRENT physical dir of a generation-swapped index table
     * (graft.ops.DirSwap) — file-layout assertions must look at the
     * committed generation a reader resolves, not the raw live path. */

@@ -27,18 +27,20 @@ class CacheLifetimeSpec extends SparkSuite {
   }
 
   test("connected-components checkpoint blocks release deterministically") {
-    import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    // gate=0 forces the star loop — the broadcast fast path never
-    // checkpoints, so there would be nothing to pin
-    val labels = Components.connectedComponents(pairs, maxEdgesBroadcast = 0L)
-    assert(labels.count() == 5)
-    // superseded rounds were unpersisted in-loop; the converged round's
-    // blocks back the result and are registered for release
-    val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(mine.nonEmpty, "expected live checkpoint blocks backing the result")
-    PipelineCaches.release(spark)
+    // a forced-large session runs the star loop — the broadcast fast
+    // path never checkpoints, so there would be nothing to pin; the
+    // helper releases the session's blocks after the body
+    val mine = forced("large") { s =>
+      import s.implicits._
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+      assert(Components.connectedComponents(pairs).count() == 5)
+      // superseded rounds were unpersisted in-loop; the converged
+      // round's blocks back the result and are registered for release
+      val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(live.nonEmpty, "expected live checkpoint blocks backing the result")
+      live
+    }
     val leftover = spark.sparkContext.getPersistentRDDs.keySet intersect mine
     assert(leftover.isEmpty,
       s"release must unpersist checkpoint blocks, leaked rdd ids: $leftover")
@@ -67,10 +69,11 @@ class CacheLifetimeSpec extends SparkSuite {
       "a metadata-sized frame must cache as one partition")
     assert(compacted.as[Int].collect().sorted.toSeq == (1 to 1000),
       "compaction must not change the rows")
-    // a zero-byte gate never fires: partitioning is untouched
-    val asIs = PipelineCaches.trackCompact(df, smallBytes = 0L)
-    assert(asIs.rdd.getNumPartitions == 8,
-      "above the gate trackCompact must behave exactly like track")
+    // forced past the gate, partitioning is untouched
+    assert(forced("large") { s =>
+      import s.implicits._
+      PipelineCaches.trackCompact((1 to 1000).toDF("n").repartition(8)).rdd.getNumPartitions
+    } == 8, "above the gate trackCompact must behave exactly like track")
     PipelineCaches.release(spark)
     assert(spark.sharedState.cacheManager.isEmpty,
       "trackCompact blocks must release with the pipeline lifetime")

@@ -25,12 +25,15 @@ class ComponentsSpec extends SparkSuite {
   }
 
   private def labelsOf(edges: Seq[(Long, Long)],
-      gate: Long = 1L << 20): Map[Long, Long] = {
-    import spark.implicits._
-    Components.connectedComponents(edges.toDF("doc_a", "doc_b"),
-        maxEdgesBroadcast = gate)
+      s: org.apache.spark.sql.SparkSession = spark): Map[Long, Long] = {
+    import s.implicits._
+    Components.connectedComponents(edges.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
+
+  /** [[labelsOf]] through the star loop (the at-scale path). */
+  private def starLabelsOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    forced("large")(labelsOf(edges, _))
 
   test("law: labels equal union-find on random graphs (three seeds, BOTH paths)") {
     for (seed <- Seq(1, 7, 42)) {
@@ -43,13 +46,11 @@ class ComponentsSpec extends SparkSuite {
       val edges = sparse ++ clique ++ chain
       val expect = unionFind(500, edges)
       assert(labelsOf(edges) == expect, s"gated, seed=$seed")
-      // gate = -1 forces the star loop (the at-scale path): gated ≡ star
-      assert(labelsOf(edges, gate = -1L) == expect, s"star, seed=$seed")
+      assert(starLabelsOf(edges) == expect, s"star, seed=$seed")
     }
   }
 
   test("local contraction is exact across partitions: shuffled dense+chain graph, many partitions") {
-    import spark.implicits._
     // adversarial for per-partition contraction: a chain whose edges are
     // SCATTERED across partitions (each partition sees disconnected
     // fragments and must emit enough forest edges for the cross-partition
@@ -60,20 +61,22 @@ class ComponentsSpec extends SparkSuite {
     val clique = for (i <- 600 to 640; j <- (i + 1) to 640) yield (i.toLong, j.toLong)
     val edges = rnd.shuffle(chain ++ clique ++ clique)
     val expect = unionFind(700, edges)
-    val df = edges.toDF("doc_a", "doc_b").repartition(16)
-    val gated = Components.connectedComponents(df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      Components.connectedComponents(edges.toDF("doc_a", "doc_b").repartition(16))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val gated = labels(spark)
     assert(gated == expect, "gated path (contracted probe) diverged")
-    val star = Components.connectedComponents(df, maxEdgesBroadcast = -1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val star = forced("large")(labels)
     assert(star == expect, "star path over contracted edges diverged")
   }
 
   test("chain of 200 nodes: star loop converges and labels collapse to the minimum") {
     val chain = (0 until 200).map(i => (i.toLong, (i + 1).toLong))
-    // gate = -1 forces the star loop — the adversarial-diameter law is
-    // about ITS O(log²) convergence, not the union-find fast path
-    val got = labelsOf(chain, gate = -1L)
+    // the star loop — the adversarial-diameter law is about ITS
+    // O(log²) convergence, not the union-find fast path
+    val got = starLabelsOf(chain)
     assert(got.size == 201)
     assert(got.values.toSet == Set(0L), s"all labels must be 0, got ${got.values.toSet}")
     assert(labelsOf(chain) == got, "gated fast path must agree on the chain")

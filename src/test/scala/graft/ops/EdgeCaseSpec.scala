@@ -202,16 +202,22 @@ class EdgeCaseSpec extends SparkSuite {
   test("exact percentiles degrade gracefully: empty frame and single-row groups, both forms") {
     import spark.implicits._
     val specs = Seq("x" -> Seq(0.5 -> "med", 0.95 -> "p95"))
-    val empty = Seq.empty[(String, java.lang.Double)].toDF("g", "x")
-    assert(Relational.exactPercentiles(empty, "g", specs, smallInputBytes = 0).isEmpty)
-    assert(Relational.exactPercentilesBySort(empty, "g", specs).isEmpty)
+    val empty = Seq.empty[(String, java.lang.Double)]
+    assert(forced("large") { s =>
+      import s.implicits._
+      Relational.exactPercentiles(empty.toDF("g", "x"), "g", specs).isEmpty
+    })
+    assert(Relational.exactPercentilesBySort(empty.toDF("g", "x"), "g", specs).isEmpty)
     // a 1-row group: pos = 0 for every percentile → lo == hi == 0, the
     // value itself comes back untouched in both forms
-    val solo = Seq(("s", 7.0), ("t", 1.0), ("t", 3.0)).toDF("g", "x")
+    val solo = Seq(("s", 7.0), ("t", 1.0), ("t", 3.0))
     def m(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val sel = m(Relational.exactPercentiles(solo, "g", specs, smallInputBytes = 0).collect())
-    val srt = m(Relational.exactPercentilesBySort(solo, "g", specs).collect())
+    val sel = m(forced("large") { s =>
+      import s.implicits._
+      Relational.exactPercentiles(solo.toDF("g", "x"), "g", specs).collect()
+    })
+    val srt = m(Relational.exactPercentilesBySort(solo.toDF("g", "x"), "g", specs).collect())
     assert(sel("s") == ((7.0, 7.0)) && srt("s") == ((7.0, 7.0)))
     assert(sel == srt, s"forms disagree: $sel vs $srt")
     PipelineCaches.release(spark)
@@ -380,12 +386,15 @@ class EdgeCaseSpec extends SparkSuite {
     assert(QuantileIndex.quantilesFromIndex(spark, s"$tmp/quant").isEmpty)
     // pageRank with no extractable transitions (all props malformed, or
     // single-event users): empty rank table, both branches
-    val evNone = Seq((1L, new java.sql.Timestamp(1000L), 1L, "view", 0.0, "{}"))
+    val evNoneRows = Seq((1L, new java.sql.Timestamp(1000L), 1L, "view", 0.0, "{}"))
+    val evNone = evNoneRows
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     assert(EventAnalytics.pageRankQ(evNone).isEmpty)
     PipelineCaches.release(spark)
-    assert(EventAnalytics.pageRankQ(evNone, maxEdgesLocal = 0).isEmpty)
-    PipelineCaches.release(spark)
+    assert(forced("large") { s =>
+      import s.implicits._
+      EventAnalytics.pageRankQ(evNoneRows.toDF(evNone.columns.toSeq: _*)).isEmpty
+    })
     // PQ: a corpus without the codebook id window fails LOUDLY (clean
     // requirement, not a wrong answer)
     val few = Seq((0L, Array.fill(64)(0.5f))).toDF("vec_id", "embedding")

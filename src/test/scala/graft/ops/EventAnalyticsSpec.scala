@@ -274,12 +274,13 @@ class EventAnalyticsSpec extends SparkSuite {
     // leaf source (4), which nothing points at
     assert(got.forall(_._2 >= 150000000L))
     assert(r(3L) > r(4L))
-    // branch parity: the DISTRIBUTED loop (gate forced shut) must equal
-    // the local contraction the fixture rides
-    val dist = EventAnalytics.pageRankQ(ev, iters = 3, k = 10,
-        maxEdgesLocal = 0).collect()
-      .map(x => x.getLong(0) -> x.getLong(1)).toList
-    graft.ops.PipelineCaches.release(spark)
+    // branch parity: the DISTRIBUTED loop (gate forced large) must
+    // equal the local contraction the fixture rides
+    val dist = forced("large") { s =>
+      import s.implicits._
+      EventAnalytics.pageRankQ(rows.toDF(ev.columns.toSeq: _*), iters = 3, k = 10).collect()
+        .map(x => x.getLong(0) -> x.getLong(1)).toList
+    }
     assert(dist == want, "distributed branch diverged from local contraction")
   }
 
@@ -298,25 +299,28 @@ class EventAnalyticsSpec extends SparkSuite {
 
   test("label propagation: two weakly-bridged cliques resolve as two " +
     "communities; branch parity; nodes conserved") {
-    import spark.implicits._
     // two triangles {1,2,3} and {10,11,12} with heavy internal edges,
     // one light bridge 3–10: after 2 synchronous min-label rounds the
     // left triangle carries label 1 and the right label 10
-    val es = Seq(
+    val edges = Seq(
       (1L, 2L, 5L), (2L, 3L, 5L), (1L, 3L, 5L),
       (10L, 11L, 5L), (11L, 12L, 5L), (10L, 12L, 5L),
-      (3L, 10L, 1L)).toDF("src", "dst", "w")
-    val sym = es.select(col("src"), col("dst"), col("w"))
-      .unionByName(es.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val local = EventAnalytics.propagateLabels(sym, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (3L, 10L, 1L))
+    def labels(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      val es = edges.toDF("src", "dst", "w")
+      val sym = es.select(col("src"), col("dst"), col("w"))
+        .unionByName(es.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+        .groupBy("src", "dst").agg(sum("w").as("w"))
+      EventAnalytics.propagateLabels(sym, iters = 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val local = labels(spark)
     assert(local.values.sum == 6L, "every node labeled exactly once")
     assert(local.keySet == Set(1L, 10L) && local(1L) == 3L && local(10L) == 3L,
       s"expected two 3-node communities, got $local")
     // branch parity: force the distributed loop
-    val dist = EventAnalytics.propagateLabels(sym, iters = 2, maxEdgesLocal = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = forced("large")(labels)
     assert(dist == local, "distributed branch diverged from local contraction")
   }
 
@@ -397,13 +401,16 @@ class EventAnalyticsSpec extends SparkSuite {
   }
 
   test("hits: star fixture separates hubs from authorities; branch parity") {
-    import spark.implicits._
     // 1,2,3 all point at 9; 9 points nowhere. 9 is the pure authority
     // (max score by construction), the pointers are pure equal hubs,
     // and every score the roles forbid is exactly zero.
-    val es = Seq((1L, 9L, 2L), (2L, 9L, 2L), (3L, 9L, 2L)).toDF("src", "dst", "w")
-    val local = EventAnalytics.hitsEdges(es).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val edges = Seq((1L, 9L, 2L), (2L, 9L, 2L), (3L, 9L, 2L))
+    def scores(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      EventAnalytics.hitsEdges(edges.toDF("src", "dst", "w")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    }
+    val local = scores(spark)
     val auth = local.map(x => x._1 -> x._2).toMap
     val hub = local.map(x => x._1 -> x._3).toMap
     assert(auth(9L) == local.map(_._2).max && auth(9L) > 0L)
@@ -412,8 +419,7 @@ class EventAnalyticsSpec extends SparkSuite {
     assert(hub(9L) == 0L, "no out-edges → zero hub")
     assert(hub(1L) == hub(2L) && hub(2L) == hub(3L) && hub(1L) > 0L,
       "symmetric pointers are equal hubs")
-    val dist = EventAnalytics.hitsEdges(es, maxEdgesLocal = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val dist = forced("large")(scores)
     assert(dist.sortBy(_._1).toSeq == local.sortBy(_._1).toSeq,
       "distributed branch diverged from local contraction")
   }
@@ -433,9 +439,8 @@ class EventAnalyticsSpec extends SparkSuite {
     val a = EventAnalytics.hitsQ(ev).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
     graft.ops.PipelineCaches.release(spark)
-    val b = EventAnalytics.hitsQ(ev, maxEdgesLocal = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
-    graft.ops.PipelineCaches.release(spark)
+    val b = forced("large")(s => EventAnalytics.hitsQ(Tables.events(s, sf)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList)
     assert(a.toSet == b.toSet, "branch parity on the real graph")
     assert(a.length <= 20 && a.nonEmpty)
     assert(a == a.sortBy(x => (-x._2, x._1)), "ordered (authority desc, node asc)")
@@ -451,9 +456,8 @@ class EventAnalyticsSpec extends SparkSuite {
     val a = EventAnalytics.labelPropQ(ev).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     graft.ops.PipelineCaches.release(spark)
-    val b = EventAnalytics.labelPropQ(ev, maxEdgesLocal = 0).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.ops.PipelineCaches.release(spark)
+    val b = forced("large")(s => EventAnalytics.labelPropQ(Tables.events(s, sf)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(a == b, "distributed branch diverged from local contraction")
     assert(a.values.sum == nNodes, "label histogram conserves the node count")
     assert(a.keySet.nonEmpty && a.keySet.size >= 1)

@@ -9,39 +9,41 @@ import graft.SparkSuite
 class NearDupIndexSpec extends SparkSuite {
 
   test("delta-vs-index pairs equal batch pairs restricted to cross pairs") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("neardup_idx").toString
-    Dedup.writeNearDupIndex(docs, dir)
-    // the delta: every corpus text re-ingested under a fresh id — each
-    // delta doc must rediscover its source as an exact duplicate
-    val delta = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-    // smallIndexBytes=0 forces the touched-bucket prune (the tiny test
-    // index would otherwise ride the full-read fast path) — this test
-    // pins the AT-SCALE plan shape
-    val q = Dedup.nearDupsAgainstIndex(spark, delta, dir, smallIndexBytes = 0)
-    // the index side must stream through broadcast-hash joins (the delta
-    // is the broadcast side) — an index-side sort or exchange before the
-    // band join would mean the corpus scan is being shuffled
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      "delta bands must broadcast against the streamed index scan")
-    // and the bands read must be partition-pruned to the delta's band
-    // buckets — without the prune, every micro-batch on the streaming
-    // ingestion path full-scans a corpus-sized inverted file
-    assert(plan.contains("PartitionFilters: [") && plan.contains("bkt"),
-      "bands scan must carry a bkt partition filter:\n" + plan.take(700))
-    val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val nDocs = docs.count()
-    assert(got.count { case (a, b, j) => a - 10000L == b && j == 1.0 } == nDocs,
-      "every delta doc must match its identical source with jaccard 1")
-    // full parity with the batch operator over the union, restricted to
-    // (indexed, new) cross pairs — same bands, same hashes, same verify
-    val batch = Dedup.nearDupPairs(docs.select("doc_id", "text").unionByName(delta)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter { case (a, b, _) => a < 10000L && b >= 10000L }
-      .map { case (a, b, j) => (b, a, j) }.toSet
-    assert(got == batch,
-      s"index query must equal batch cross pairs (got=${got.size} batch=${batch.size})")
+    // forced large: the touched-bucket prune (the tiny test index would
+    // otherwise ride the full-read fast path) — this test pins the
+    // AT-SCALE plan shape
+    forced("large") { spark =>
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val dir = java.nio.file.Files.createTempDirectory("neardup_idx").toString
+      Dedup.writeNearDupIndex(docs, dir)
+      // the delta: every corpus text re-ingested under a fresh id — each
+      // delta doc must rediscover its source as an exact duplicate
+      val delta = docs.select((col("doc_id") + 10000L).as("doc_id"), col("text"))
+      val q = Dedup.nearDupsAgainstIndex(spark, delta, dir)
+      // the index side must stream through broadcast-hash joins (the delta
+      // is the broadcast side) — an index-side sort or exchange before the
+      // band join would mean the corpus scan is being shuffled
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        "delta bands must broadcast against the streamed index scan")
+      // and the bands read must be partition-pruned to the delta's band
+      // buckets — without the prune, every micro-batch on the streaming
+      // ingestion path full-scans a corpus-sized inverted file
+      assert(plan.contains("PartitionFilters: [") && plan.contains("bkt"),
+        "bands scan must carry a bkt partition filter:\n" + plan.take(700))
+      val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val nDocs = docs.count()
+      assert(got.count { case (a, b, j) => a - 10000L == b && j == 1.0 } == nDocs,
+        "every delta doc must match its identical source with jaccard 1")
+      // full parity with the batch operator over the union, restricted to
+      // (indexed, new) cross pairs — same bands, same hashes, same verify
+      val batch = Dedup.nearDupPairs(docs.select("doc_id", "text").unionByName(delta)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .filter { case (a, b, _) => a < 10000L && b >= 10000L }
+        .map { case (a, b, j) => (b, a, j) }.toSet
+      assert(got == batch,
+        s"index query must equal batch cross pairs (got=${got.size} batch=${batch.size})")
+    }
   }
 
   test("append folds a delta into the index: equals a fresh index over the union") {
@@ -71,30 +73,33 @@ class NearDupIndexSpec extends SparkSuite {
   }
 
   test("bands are bucket-partitioned and a small delta reads few buckets") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("neardup_idx2").toString
-    Dedup.writeNearDupIndex(docs, dir, bandBuckets = 32)
-    val bktDirs = physicalDir(s"$dir/bands").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-    assert(bktDirs.length > 4 && bktDirs.length <= 32,
-      s"corpus bands should spread over many buckets, got ${bktDirs.length}")
-    // a 1-doc delta has 4 band rows → at most 4 distinct buckets; its
-    // scan must select at most 4 of the written partitions
-    val delta = docs.filter(col("doc_id") === 0L)
-      .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
-    val q = Dedup.nearDupsAgainstIndex(spark, delta, dir, smallIndexBytes = 0)
-    val scans = q.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.metadata.get("Location").exists(_.contains("bands")) => s
+    // forced large: the touched-bucket prune the tiny index would skip
+    forced("large") { spark =>
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val dir = java.nio.file.Files.createTempDirectory("neardup_idx2").toString
+      Dedup.writeNearDupIndex(docs, dir, bandBuckets = 32)
+      val bktDirs = physicalDir(s"$dir/bands").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
+      assert(bktDirs.length > 4 && bktDirs.length <= 32,
+        s"corpus bands should spread over many buckets, got ${bktDirs.length}")
+      // a 1-doc delta has 4 band rows → at most 4 distinct buckets; its
+      // scan must select at most 4 of the written partitions
+      val delta = docs.filter(col("doc_id") === 0L)
+        .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
+      val q = Dedup.nearDupsAgainstIndex(spark, delta, dir)
+      val scans = q.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.metadata.get("Location").exists(_.contains("bands")) => s
+      }
+      assert(scans.nonEmpty, "expected a file scan over <dir>/bands")
+      assert(scans.head.selectedPartitions.partitionCount <= 4,
+        s"1-doc delta must prune to ≤4 buckets, read ${scans.head.selectedPartitions.partitionCount}")
+      // and it must still find its identical source in the index (the
+      // fixture makes doc 0 a near-dup of many docs — full parity with the
+      // batch operator is the first test's job)
+      val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got.contains((10000L, 0L, 1.0)))
     }
-    assert(scans.nonEmpty, "expected a file scan over <dir>/bands")
-    assert(scans.head.selectedPartitions.partitionCount <= 4,
-      s"1-doc delta must prune to ≤4 buckets, read ${scans.head.selectedPartitions.partitionCount}")
-    // and it must still find its identical source in the index (the
-    // fixture makes doc 0 a near-dup of many docs — full parity with the
-    // batch operator is the first test's job)
-    val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got.contains((10000L, 0L, 1.0)))
   }
 
   test("compaction collapses accumulated append files; lookups answer identically") {

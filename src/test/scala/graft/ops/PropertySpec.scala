@@ -47,8 +47,10 @@ class PropertySpec extends SparkSuite {
         expr("percentile(const, 0.5)").as("p50_c"),
         expr("percentile(skew, 0.25)").as("p25_s"),
         expr("percentile(skew, 0.99)").as("p99_s")).collect())
-      val select = toMap(Relational.exactPercentiles(df, "g", specs,
-        smallInputBytes = 0).collect())
+      val select = toMap(forced("large") { s =>
+        import s.implicits._
+        Relational.exactPercentiles(rows.toDF("g", "ties", "const", "skew"), "g", specs).collect()
+      })
       val sort = toMap(Relational.exactPercentilesBySort(df, "g", specs).collect())
       assert(select == builtin, s"select form diverged from builtin, seed=$seed")
       assert(sort == builtin, s"sort form diverged from builtin, seed=$seed")

@@ -262,13 +262,16 @@ class RelationalSpec extends SparkSuite {
     assert(rnLines.nonEmpty, s"expected the in-bucket row_number:\n${selPlan.take(600)}")
     rnLines.foreach(l => assert(l.contains("rk#"),
       s"row_number must be bucket-scoped (rk in partition spec): $l"))
-    val sel = Relational.exactPercentiles(li3, "l_returnflag", specs3,
-      smallInputBytes = 0)
-    assert(sel.queryExecution.executedPlan.toString.contains("LocalTableScan"),
-      "select form result should be the driver-interpolated literal frame")
+    val selMap = forced("large") { s =>
+      val sel = Relational.exactPercentiles(graft.sources.Tables.lineitem(s, sf)
+        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice")),
+        "l_returnflag", specs3)
+      assert(sel.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+        "select form result should be the driver-interpolated literal frame")
+      sel.collect()
+        .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    }
     // and the select form agrees with the dispatched query exactly
-    val selMap = sel.collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     q.collect().foreach { r =>
       assert(selMap(r.getString(0)) == ((r.getDouble(1), r.getDouble(2), r.getDouble(3))),
         s"select and sort forms disagree for ${r.getString(0)}")
@@ -299,17 +302,23 @@ class RelationalSpec extends SparkSuite {
     // skip-null): a plain equi-join anywhere in the rank pipeline
     // would silently drop its rows and return null percentiles where
     // the builtin computes 5.5 / 60.0 (round-5 review finding)
-    val df = Seq[(String, java.lang.Double, java.lang.Double)](
+    val rows = Seq[(String, java.lang.Double, java.lang.Double)](
       ("a", 1.0, 10.0), ("a", null, 20.0), ("a", 2.0, 30.0), ("a", 100.0, 40.0),
       ("b", 5.0, null), ("b", 7.0, null), ("b", 6.0, null),
       (null, 5.0, 50.0), (null, 6.0, 70.0)
-    ).toDF("g", "x", "y")
+    )
+    val df = rows.toDF("g", "x", "y")
     val specs = Seq("x" -> Seq(0.5 -> "med_x", 0.95 -> "p95_x"), "y" -> Seq(0.5 -> "med_y"))
-    // smallInputBytes=0 forces the histogram-select form — the tiny df
-    // would otherwise dispatch to the sort form (covered below anyway)
-    val got = Relational.exactPercentiles(df, "g", specs, smallInputBytes = 0)
-      .collect().map(r => r.getString(0) ->
-        (Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toMap
+    def percentiles(s: org.apache.spark.sql.SparkSession, maxStatsBroadcast: Long) = {
+      import s.implicits._
+      Relational.exactPercentiles(rows.toDF("g", "x", "y"), "g", specs,
+          maxStatsBroadcast = maxStatsBroadcast)
+        .collect().map(r => r.getString(0) ->
+          (Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toMap
+    }
+    // a forced-large session runs the histogram-select form — the tiny
+    // df would otherwise dispatch to the sort form (covered below anyway)
+    val got = forced("large")(percentiles(_, 200000))
     val want = df.groupBy(col("g"))
       .agg(expr("percentile(x, 0.5)").as("med_x"),
         expr("percentile(x, 0.95)").as("p95_x"),
@@ -325,10 +334,7 @@ class RelationalSpec extends SparkSuite {
     assert(gotSort == want, s"sort form diverged: $gotSort vs $want")
     // ...and through the group-count gate (a stats frame larger than
     // the gate must dispatch to the sort form, same answer)
-    val gotGated = Relational.exactPercentiles(df, "g", specs,
-        maxStatsBroadcast = 0, smallInputBytes = 0)
-      .collect().map(r => r.getString(0) ->
-        (Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toMap
+    val gotGated = forced("large")(percentiles(_, 0))
     assert(gotGated == want, s"gated dispatch diverged: $gotGated vs $want")
   }
 

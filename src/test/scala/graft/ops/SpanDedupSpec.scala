@@ -103,11 +103,10 @@ class SpanDedupSpec extends SparkSuite {
     assert(out(101L)._1 == 2L, "intra-delta repeats must not count toward the cap")
     // the pruned read must carry a bkt partition filter. Forced onto the
     // AT-SCALE eager path: cap=3 mismatches the meta cap (so the
-    // resident-set fast path cannot answer) and smallIndexBytes=0 defeats
-    // the small-index full-read gate
-    val plan = Dedup.spanDedupAgainstIndex(spark, delta, dir, cap = 3,
-        smallIndexBytes = 0)
-      .queryExecution.executedPlan.toString
+    // resident-set fast path cannot answer) and a forced-large session
+    // skips the small-index full-read gate
+    val plan = forced("large")(s => Dedup.spanDedupAgainstIndex(s, delta, dir, cap = 3)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("PartitionFilters: [") && plan.contains("bkt"),
       "spans scan must be partition-pruned:\n" + plan.take(700))
     // and the default (meta-fresh) path answers from the resident

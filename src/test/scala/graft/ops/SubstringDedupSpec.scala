@@ -130,9 +130,10 @@ class SubstringDedupSpec extends SparkSuite {
     val dir = tmp("substr_prune")
     Dedup.writeSubstringIndex(corpus, dir, minLen = 4)
     val delta = Seq((500L, "tok1a tok1b tok1c tok1d tok1e")).toDF("doc_id", "text")
-    // force the prune path: gate the full-read shortcut off
-    val plan = Dedup.substringDedupAgainstIndex(spark, delta, dir,
-      smallIndexBytes = 0L).queryExecution.executedPlan.toString
+    // force the prune path: a forced-large session skips the full-read
+    // shortcut
+    val plan = forced("large")(s => Dedup.substringDedupAgainstIndex(s, delta, dir)
+      .queryExecution.executedPlan.toString)
     PipelineCaches.release(spark)
     val scanLine = plan.linesIterator.find(l =>
       l.contains("FileScan") && l.contains("grams")).getOrElse("")

@@ -86,12 +86,14 @@ class WinnowSpec extends SparkSuite {
     graft.ops.PipelineCaches.release(spark)
     assert(got == want, s"lookup $got vs batch-restricted $want")
     assert(got.nonEmpty || want.isEmpty)
-    // with the footprint gate off, the fps read is pruned to the
+    // forced past the footprint gate, the fps read is pruned to the
     // delta's buckets and answers the same
-    val pruned = Dedup.winnowAgainstIndex(spark, delta, dir, smallIndexBytes = 0)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [bkt"), plan)
-    assert(pruned.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == got)
+    forced("large") { s =>
+      val pruned = Dedup.winnowAgainstIndex(s, delta, dir)
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [bkt"), plan)
+      assert(pruned.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == got)
+    }
     graft.ops.PipelineCaches.release(spark)
   }
 

@@ -26,7 +26,8 @@ import graft.{SparkEntry, SparkSuite}
   * PlanGuardSpec's static check catches these at plan time; this sweep
   * re-checks AFTER adaptive re-planning, where a lost hint or an AQE
   * coalesce-to-one could silently introduce what the static plan
-  * lacked. */
+  * lacked. It runs twice: once as the fixtures dispatch, once with every
+  * size gate forced to its 100 TB form (graft.ops.Dispatch). */
 class PlanSweepSpec extends SparkSuite {
 
   private val bnljAllowed = graft.PlanAllowances.bnljAllowed
@@ -58,11 +59,11 @@ class PlanSweepSpec extends SparkSuite {
       (other.children ++ other.subqueries).forall(reducedBeforeScan)
   }
 
-  test("every declared query's EXECUTED plan: no cartesian, no undeclared BNLJ, " +
-    "no single-partition shuffle of unreduced scan data") {
+  /** Violations over every declared query built and executed on `s`. */
+  private def sweep(s: org.apache.spark.sql.SparkSession): Seq[String] = {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sf)
+      val df = fn(s, sf)
       df.write.format("noop").mode("overwrite").save()
       val nodes = walk(df.queryExecution.executedPlan)
       nodes.foreach { n =>
@@ -78,10 +79,20 @@ class PlanSweepSpec extends SparkSuite {
           case _ =>
         }
       }
-      graft.ops.PipelineCaches.release(spark)
-      spark.sharedState.cacheManager.clearCache()
+      graft.ops.PipelineCaches.release(s)
+      s.sharedState.cacheManager.clearCache()
     }
-    assert(failures.isEmpty,
-      s"plan sweep violations:\n${failures.distinct.mkString("\n")}")
+    failures.distinct.toSeq
+  }
+
+  test("every declared query's EXECUTED plan: no cartesian, no undeclared BNLJ, " +
+    "no single-partition shuffle of unreduced scan data") {
+    val failures = sweep(spark)
+    assert(failures.isEmpty, s"plan sweep violations:\n${failures.mkString("\n")}")
+  }
+
+  test("the same sweep with every size gate forced to its large form") {
+    val failures = forced("large")(sweep)
+    assert(failures.isEmpty, s"plan sweep violations:\n${failures.mkString("\n")}")
   }
 }
